@@ -154,11 +154,15 @@ private[graft] object ManifestStore {
   }
 
   /** Reclaim storage a long-lived store no longer needs: every
-    * manifest below the current one and every `data/<writeId>` dir the
-    * current manifest doesn't reference. NOT called automatically —
-    * superseded manifests are consistent snapshots a concurrent
-    * reader may still hold; run vacuum when no reader can be older
-    * than the current commit.
+    * manifest below the current one and every entry under `data/`
+    * that is neither a dir the current manifest references nor on the
+    * path to one. A write dir that still holds one live partition or
+    * segment keeps only that: its superseded siblings (a partition
+    * compaction rewrote elsewhere, a segment folded into a `__c`
+    * segment) and its writer's `_SUCCESS` markers go too. NOT called
+    * automatically — superseded manifests are consistent snapshots a
+    * concurrent reader may still hold; run vacuum when no reader can
+    * be older than the current commit.
     */
   def vacuum(spark: SparkSession, root: String): Unit = {
     val rootP = new Path(root)
@@ -170,12 +174,21 @@ private[graft] object ManifestStore {
       names.sorted.dropRight(1).foreach(n => fs.delete(new Path(mDir, n), false))
       fs.listStatus(mDir).map(_.getPath)
         .filter(_.getName.startsWith(".tmp-")).foreach(fs.delete(_, false))
-      val live = m.tables.values.flatMap(_.values)
-        .map(rel => rel.split("/").take(2).mkString("/")).toSet   // data/<writeId>
+      val live = m.tables.values.flatMap(_.values).toSet
+      // every proper ancestor of a live dir: descend, never delete
+      val onPath = live.flatMap { rel =>
+        val parts = rel.split("/")
+        (1 until parts.length).map(i => parts.take(i).mkString("/"))
+      }
+      def sweep(dir: Path, rel: String): Unit =
+        fs.listStatus(dir).foreach { st =>
+          val r = s"$rel/${st.getPath.getName}"
+          if (live.contains(r)) ()
+          else if (onPath.contains(r)) sweep(st.getPath, r)
+          else fs.delete(st.getPath, true)
+        }
       val dataDir = new Path(rootP, "data")
-      if (fs.exists(dataDir)) fs.listStatus(dataDir).map(_.getPath)
-        .filter(p => !live.contains(s"data/${p.getName}"))
-        .foreach(fs.delete(_, true))
+      if (fs.exists(dataDir)) sweep(dataDir, "data")
     }
   }
 }

@@ -134,6 +134,52 @@ class ChunkIndexSpec extends SparkSpec {
       .sameElements(chunksBefore))
   }
 
+  test("vacuum after upsert + compact leaves only manifest-referenced data, results unchanged") {
+    import graft.sources.ManifestStore
+    val out = Files.createTempDirectory("graft_vacuum_idx").toString
+    ChunkIndex.write(spark, sfDir, out)
+    // each upsert supersedes the touched partitions of the build's write
+    // dir, which stays live through every partition it still serves
+    Seq(1000001L, 1000009L).foreach { id =>
+      ChunkIndex.upsert(spark, out, spark.createDataFrame(
+        Seq((id, s"fresh crawl doc $id text"))).toDF("doc_id", "text"))
+    }
+    ChunkIndex.compact(spark, out, maxFilesPerPartition = 1)
+
+    val root = new org.apache.hadoop.fs.Path(out)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootUri = fs.makeQualified(root).toUri
+    def parquetRels(): Seq[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(root, "data"), true)
+      val b = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (p.getName.endsWith(".parquet")) b += rootUri.relativize(p.toUri).getPath
+      }
+      b.result()
+    }
+    def unreferenced(): Seq[String] = {
+      val live = ManifestStore.current(spark, out).get.tables.values.flatMap(_.values)
+      parquetRels().filterNot(f => live.exists(rel => f.startsWith(rel + "/")))
+    }
+    val liveWriteIds = ManifestStore.current(spark, out).get.tables.values
+      .flatMap(_.values).map(_.split("/")(1)).toSet
+    assert(unreferenced().exists(f => liveWriteIds.contains(f.split("/")(1))),
+      "fixture left no superseded partition inside a live write dir")
+
+    val chunksBefore = ChunkIndex.readChunks(spark, out).collect().map(_.toString).sorted
+    val embBefore = ChunkIndex.readEmbeddings(spark, out).collect().map(_.toString).sorted
+    val searchBefore = ChunkIndex.search(spark, out, "spark batch join", 2, 5).collect()
+    ChunkIndex.vacuum(spark, out)
+    assert(unreferenced().isEmpty, s"vacuum left dead data: ${unreferenced()}")
+    assert(ChunkIndex.readChunks(spark, out).collect().map(_.toString).sorted
+      .sameElements(chunksBefore))
+    assert(ChunkIndex.readEmbeddings(spark, out).collect().map(_.toString).sorted
+      .sameElements(embBefore))
+    assert(ChunkIndex.search(spark, out, "spark batch join", 2, 5).collect()
+      .map(_.toString).toSeq === searchBefore.map(_.toString).toSeq)
+  }
+
   test("compact commit aborts when a concurrent upsert advanced the manifest") {
     import graft.sources.ManifestStore
     val out = Files.createTempDirectory("graft_compact_race").toString

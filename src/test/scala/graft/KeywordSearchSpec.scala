@@ -124,6 +124,59 @@ class KeywordSearchSpec extends SparkSpec {
     assert(a === b, "a NULL-text doc must not shift N/avgdl")
   }
 
+  /** (doc, score) in rank order of the fixture query over `d`. */
+  private def ranked(d: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    KeywordSearch.bm25(d, "doc_id", "text", queries, "q_id", "q_text")
+      .orderBy(col("rk")).collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+
+  test("bm25 serves a repeat call over the same corpus from the session memo") {
+    def corpus = Seq((1L, "apple banana apple"), (2L, "apple cherry"),
+      (3L, "banana banana banana banana"), (4L, "date fig"),
+      (5L, "memo")).toDF("doc_id", "text")
+    val cold = DfCache.memoComputes
+    val first = KeywordSearch.bm25(corpus, "doc_id", "text", queries, "q_id", "q_text")
+      .orderBy(col("q_id"), col("rk")).collect().toSeq
+    assert(DfCache.memoComputes > cold, "a new corpus did not build its memo")
+    val before = DfCache.memoComputes
+    // an equal corpus built anew: the memo is keyed by plan, not by frame
+    val again = KeywordSearch.bm25(corpus, "doc_id", "text",
+      Seq((7L, "apple banana")).toDF("q_id", "q_text"), "q_id", "q_text")
+      .orderBy(col("q_id"), col("rk")).collect().toSeq
+    assert(DfCache.memoComputes === before, "the corpus side was recomputed")
+    assert(again.map(r => (r.getLong(1), r.getDouble(2), r.getLong(3))) ===
+      first.map(r => (r.getLong(1), r.getDouble(2), r.getLong(3))))
+  }
+
+  test("bm25 scores a parquet corpus rewritten mid-session from its new rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_docs").resolve("docs").toString
+    docs.write.parquet(dir)
+    assert(ranked(spark.read.parquet(dir)) === ranked(docs))
+    val rewritten = Seq((5L, "banana"), (6L, "apple apple cherry"), (7L, "fig"))
+      .toDF("doc_id", "text")
+    rewritten.write.mode("overwrite").parquet(dir)
+    val after = ranked(spark.read.parquet(dir))
+    assert(after.map(_._1).toSet === Set(5L, 6L), "stale postings served after the rewrite")
+    assert(after === ranked(rewritten))
+  }
+
+  test("bm25 keeps interleaved corpora apart") {
+    val other = Seq((1L, "x common"), (2L, "y common"), (3L, "apple rare"),
+      (4L, "w banana")).toDF("doc_id", "text")
+    val a1 = ranked(docs); val b1 = ranked(other)
+    val a2 = ranked(docs); val b2 = ranked(other)
+    assert(a1 === a2 && b1 === b2)
+    assert(a1.map(_._1).toSet === Set(1L, 2L, 3L))
+    assert(b1.map(_._1).toSet === Set(3L, 4L))
+    assert(a1 !== b1)
+  }
+
+  test("bm25 scores a non-deterministic corpus without memoizing it") {
+    val before = DfCache.memoComputes
+    val got = ranked(docs.where(rand(7) >= 0.0))   // keeps every row, plan is non-deterministic
+    assert(DfCache.memoComputes === before)
+    assert(got === ranked(docs))
+  }
+
   test("hybrid_rrf equals a driver-side fusion of the two systems' ranks") {
     def ranksOf(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("doc_id")) -> r.getAs[Long]("rk")).toMap

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{functions, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -125,16 +125,34 @@ object ChunkIndex {
     * mapping the manifest should carry. The partition key is
     * duplicated into the throwaway [[PartDirCol]] for the directory
     * layout, so the real column stays in the data files.
+    *
+    * A [[Sized]] layout clusters the rows first, so each partition
+    * comes out of one write task, or out of [[targetFileCount]] tasks
+    * (by a `doc_id` hash slot) when it spans several target files,
+    * and lands already compacted; the write runs one task per target
+    * file of the partitions' total bytes. None keeps the plan's own
+    * task layout (the initial build, where no partition size is known
+    * yet).
     */
   private def writeTablePartitions(spark: SparkSession, df: DataFrame,
-      partCol: String, root: String, writeId: String, table: String): Map[String, String] = {
+      partCol: String, root: String, writeId: String, table: String,
+      sized: Option[Sized] = None): Map[String, String] = {
     val rel = s"data/$writeId/$table"
     val abs = s"$root/$rel"
     if (df.isEmpty) {
       df.write.mode(SaveMode.Overwrite).parquet(abs)
       Map(FlatKey -> rel)
     } else {
-      df.withColumn(PartDirCol, col(partCol))
+      val laid = sized.fold(df) { case Sized(bytes, target) =>
+        val slots = bytes.map { case (p, b) => p.toInt -> targetFileCount(b, target) }
+          .filter(_._2 > 1)
+        val key =
+          if (slots.isEmpty) Seq(col(partCol))
+          else Seq(col(partCol), pmod(xxhash64(col("doc_id")),
+            coalesce(try_element_at(typedLit(slots), col(partCol)), lit(1)).cast("long")))
+        df.repartition(targetFileCount(bytes.values.sum, target), key: _*)
+      }
+      laid.withColumn(PartDirCol, col(partCol))
         .write.mode(SaveMode.Overwrite).partitionBy(PartDirCol).parquet(abs)
       val fs = fsOf(spark, new Path(abs))
       fs.listStatus(new Path(abs)).map(_.getPath.getName)
@@ -143,6 +161,24 @@ object ChunkIndex {
         .toMap
     }
   }
+
+  /** An upsert's write layout: the current bytes of every partition it
+    * rewrites (0 for one only its fresh rows occupy) and the target
+    * data-file size.
+    */
+  private final case class Sized(bytes: Map[String, Long], targetBytes: Long)
+
+  /** The data files of one partition dir (writer markers excluded). */
+  private def dataFiles(spark: SparkSession, dir: Path): Array[FileStatus] =
+    fsOf(spark, dir).listStatus(dir).filter(st => st.isFile &&
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+
+  /** The one layout rule [[compact]] and the upsert write share: a
+    * partition of `bytes` is held in ⌈bytes / `targetBytes`⌉ data
+    * files, at least one.
+    */
+  private[sources] def targetFileCount(bytes: Long, targetBytes: Long): Int =
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
 
   /** Build and persist the index tables (embed_pdfs.py:220
     * `build_and_save_index`) as the root's first commit. Both tables
@@ -171,11 +207,18 @@ object ChunkIndex {
     * other partition's files are untouched and carried forward by
     * reference in the new manifest.
     *
+    * Each rewritten partition is written in its compacted layout —
+    * ⌈bytes / [[CompactTargetBytes]]⌉ files for the bytes of its
+    * current dir, one file for a partition the batch creates — so
+    * [[compact]] finds nothing to rewrite in it (unless the merge
+    * shrank it by more than a whole target file).
+    *
     * The `chunks` side's shard is doc_id % [[ChunkShards]] — derivable
-    * arithmetically from the incoming ids, so only the `embeddings`
-    * side (whose bucket depends on old vector content) pays an
-    * existence scan — and that scan is manifest-pruned to the two id
-    * columns.
+    * arithmetically from the incoming ids, and the fresh rows' shards
+    * are a subset of the same set — so only the `embeddings` side
+    * (whose bucket depends on vector content, old and new) pays an
+    * existence scan and a partition collect of its fresh rows; the
+    * scan is manifest-pruned to the two id columns.
     *
     * ATOMICITY: both tables' new partitions are fully written before
     * the single manifest commit makes any of them visible, so the
@@ -184,7 +227,12 @@ object ChunkIndex {
     * two-table state, and re-delivering the batch (the streaming
     * path's natural behavior; the upsert is idempotent) completes it.
     */
-  def upsert(spark: SparkSession, outPath: String, incoming: DataFrame): Unit = {
+  def upsert(spark: SparkSession, outPath: String, incoming: DataFrame): Unit =
+    upsert(spark, outPath, incoming, CompactTargetBytes)
+
+  /** [[upsert]] with the target file size as a parameter (tests). */
+  private[sources] def upsert(spark: SparkSession, outPath: String, incoming: DataFrame,
+      targetBytes: Long): Unit = {
     currentManifest(spark, outPath) match {
       case None =>
         // bootstrap: nothing to merge — the first batch creates the index
@@ -216,14 +264,17 @@ object ChunkIndex {
                 s"with $k=$mine — refusing to mix layouts; rebuild the index")
           }
         }
-        // old chunk shards are a pure function of the ids — no table scan
-        val chunkOldParts = Some(ids
+        // every shard an incoming doc can occupy, old or new, is a pure
+        // function of the ids — no table scan, no fresh-side collect
+        val chunkParts = Some(ids
           .select(pmod(col("doc_id"), lit(ChunkShards.toLong)).cast("int").as("shard"))
           .distinct().collect().map(_.get(0).toString).toSet)
         val ch = upsertTable(spark, outPath, m.table("chunks"), "shard",
-          ids, withShard(Ingest.chunksOf(incoming)), chunkOldParts, writeId, "chunks")
+          ids, withShard(Ingest.chunksOf(incoming)), chunkParts, writeId, "chunks",
+          targetBytes)
         val em = upsertTable(spark, outPath, m.table("embeddings"), "bucket",
-          ids, withBucket(Ingest.embedOf(incoming)), None, writeId, "embeddings")
+          ids, withBucket(Ingest.embedOf(incoming)), None, writeId, "embeddings",
+          targetBytes)
         // defaults-then-recorded: validated keys keep their recorded
         // value, missing writer keys are back-filled, unknown recorded
         // keys carry forward
@@ -239,36 +290,53 @@ object ChunkIndex {
     * docs, write survivors + fresh rows under the new write dir, and
     * return the updated mapping. A partition the merge vacates is
     * simply absent from it.
+    *
+    * `touched` is the full set of partitions holding an old or a new
+    * version of an incoming doc when the caller can derive it without
+    * reading data; None finds it by scanning the old versions and
+    * collecting the fresh rows' partitions.
+    *
+    * The write is [[Sized]] by each affected partition's current dir:
+    * it gets [[targetFileCount]] of those bytes in files (1 for a
+    * partition only the fresh rows occupy), the count [[compact]]
+    * accepts as compacted.
     */
   private def upsertTable(spark: SparkSession, root: String,
       mapping: Map[String, String], partCol: String, ids: DataFrame,
-      fresh: DataFrame, oldParts: Option[Set[String]], writeId: String,
-      table: String): Map[String, String] = {
-    // fresh feeds two jobs (partition list + merged write): materialize once
-    val freshCk = fresh.localCheckpoint()
-    val freshParts = freshCk.select(col(partCol)).distinct()
-      .collect().map(_.get(0).toString).toSet
-    val olds: Set[String] = oldParts.getOrElse {
-      val paths = mapping.values.toSeq.map(r => s"$root/$r")
-      if (paths.isEmpty) Set.empty[String]
-      else spark.read.parquet(paths: _*)
-        .join(functions.broadcast(ids), Seq("doc_id"), "left_semi")
-        .select(col(partCol)).distinct().collect().map(_.get(0).toString).toSet
+      fresh: DataFrame, touched: Option[Set[String]], writeId: String,
+      table: String, targetBytes: Long): Map[String, String] = {
+    val (freshRows, parts) = touched match {
+      case Some(ps) => (fresh, ps)
+      case None =>
+        // fresh feeds two jobs (partition list + merged write): materialize once
+        val freshCk = fresh.localCheckpoint()
+        val freshParts = freshCk.select(col(partCol)).distinct()
+          .collect().map(_.get(0).toString).toSet
+        val paths = mapping.values.toSeq.map(r => s"$root/$r")
+        val olds =
+          if (paths.isEmpty) Set.empty[String]
+          else spark.read.parquet(paths: _*)
+            .join(functions.broadcast(ids), Seq("doc_id"), "left_semi")
+            .select(col(partCol)).distinct().collect().map(_.get(0).toString).toSet
+        (freshCk, olds ++ freshParts)
     }
     // a flat (empty-table) dir holds no partition key: always rewrite it
-    val affected = olds ++ freshParts + FlatKey
-    val keepPaths = mapping.filter(kv => affected(kv._1)).values
-      .toSeq.map(r => s"$root/$r")
+    val affected = parts + FlatKey
+    val keepDirs = mapping.filter(kv => affected(kv._1))
+    val bytes = parts.map { p =>
+      p -> keepDirs.get(p).fold(0L)(r => dataFiles(spark, new Path(s"$root/$r")).map(_.getLen).sum)
+    }.toMap
+    val keepPaths = keepDirs.values.toSeq.map(r => s"$root/$r")
     val keep =
-      if (keepPaths.isEmpty) freshCk.limit(0)
+      if (keepPaths.isEmpty) freshRows.limit(0)
       else spark.read.parquet(keepPaths: _*)
         .join(functions.broadcast(ids), Seq("doc_id"), "left_anti")
     // copy-on-write: keep is read from the OLD dirs and written to NEW
     // ones — no lineage-severing checkpoint needed, nothing overwrites
     // the files it reads
     val written = writeTablePartitions(spark,
-      keep.unionByName(freshCk.select(keep.columns.map(col).toIndexedSeq: _*)),
-      partCol, root, writeId, table)
+      keep.unionByName(freshRows.select(keep.columns.map(col).toIndexedSeq: _*)),
+      partCol, root, writeId, table, Some(Sized(bytes, targetBytes)))
     val carried = (mapping -- affected).filterNot(_._1 == FlatKey)
     // an all-vacated merge writes a flat empty dir; drop it if real
     // partitions survive elsewhere
@@ -282,9 +350,10 @@ object ChunkIndex {
     * index via [[upsert]] — the streaming form of the reference's
     * ingest/reindex flow (documents become searchable as they
     * arrive, and only the touched partitions are rewritten per
-    * batch). `foreachBatch` is the standard exactly-once-per-batch
-    * seam for sinks without native streaming support; each batch is
-    * one manifest commit.
+    * batch, each already in its compacted layout, so a long-running
+    * stream does not fragment the index). `foreachBatch` is the
+    * standard exactly-once-per-batch seam for sinks without native
+    * streaming support; each batch is one manifest commit.
     */
   def streamingUpsert(docs: DataFrame, outPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -294,33 +363,39 @@ object ChunkIndex {
         if (!batch.isEmpty) upsert(batch.sparkSession, outPath, batch)
       }
 
-  /** Target data-file size [[compact]] coalesces toward — partitions
-    * are rewritten into ⌈bytes / this⌉ files (≥ 1), the standard lake
-    * compaction contract, so a 100 TB index compacts to executor-
-    * friendly reads instead of a single giant file per partition.
+  /** Target data-file size [[compact]] and the [[upsert]] write aim
+    * for — a partition is held in ⌈bytes / this⌉ files (≥ 1,
+    * [[targetFileCount]]), the standard lake compaction contract, so
+    * a 100 TB index compacts to executor-friendly reads instead of a
+    * single giant file per partition.
     */
   val CompactTargetBytes: Long = 128L * 1024 * 1024
 
   /** Compact OVER-FRAGMENTED partitions of the persisted index — the
-    * maintenance pass a daily-crawl upsert cadence needs: every MERGE
-    * cycle rewrites its touched partitions with however many files
-    * the write job's task layout produced, so a hot partition's file
-    * count creeps upward and a year of micro-batches is the classic
-    * small-files death (every search probing that bucket opens them
-    * all).
+    * maintenance pass for partitions whose file count crept upward:
+    * dirs written by the initial build's task layout, by an earlier
+    * writer, or by any path that does not size its output (a year of
+    * such micro-batches is the classic small-files death: every
+    * search probing that bucket opens them all). [[upsert]] already
+    * writes each touched partition in the layout this pass produces,
+    * so an upsert cycle leaves it nothing to rewrite.
     *
     * Manifest-aware and copy-on-write, like [[upsert]]: for each
-    * table, any LIVE partition whose data dir holds more than
-    * `maxFilesPerPartition` data files is re-read (that dir only —
-    * explicit path selection, no discovery) and rewritten under a
-    * fresh write id into ⌈bytes / [[CompactTargetBytes]]⌉ files;
-    * every other partition is carried forward BY REFERENCE — its
-    * files are not read, copied, or renamed (IncrementalSpec-style
-    * byte-identical). One manifest commit publishes the result; a
-    * crash at any point leaves readers on the previous consistent
-    * state, and [[vacuum]] later reclaims the superseded dirs. Row
-    * content is untouched by construction — compaction is pure
-    * layout; ChunkIndexSpec pins search-result identity pre/post.
+    * table, a LIVE partition is rewritten only when it holds more
+    * data files than both `maxFilesPerPartition` and its target count
+    * ⌈bytes / [[CompactTargetBytes]]⌉ ([[targetFileCount]]) — a
+    * partition already at or under its target gains nothing, and
+    * rewriting it would make the pass non-idempotent. A rewritten
+    * partition is re-read (that dir only — explicit path selection,
+    * no discovery) and written under a fresh write id into its target
+    * count of files; every other partition is carried forward BY
+    * REFERENCE — its files are not read, copied, or renamed
+    * (IncrementalSpec-style byte-identical). One manifest commit
+    * publishes the result; a crash at any point leaves readers on the
+    * previous consistent state, and [[vacuum]] later reclaims the
+    * superseded dirs. Row content is untouched by construction —
+    * compaction is pure layout; ChunkIndexSpec pins search-result
+    * identity pre/post.
     *
     * Returns the number of partitions rewritten (0 = no commit —
     * including the case where a concurrent writer advanced the
@@ -329,7 +404,12 @@ object ChunkIndex {
     * state built from a superseded snapshot).
     */
   def compact(spark: SparkSession, root: String,
-              maxFilesPerPartition: Int = 8): Int = {
+              maxFilesPerPartition: Int = 8): Int =
+    compact(spark, root, maxFilesPerPartition, CompactTargetBytes)
+
+  /** [[compact]] with the target file size as a parameter (tests). */
+  private[sources] def compact(spark: SparkSession, root: String,
+      maxFilesPerPartition: Int, targetBytes: Long): Int = {
     require(maxFilesPerPartition > 0,
       s"maxFilesPerPartition must be positive, got $maxFilesPerPartition")
     currentManifest(spark, root) match {
@@ -340,17 +420,12 @@ object ChunkIndex {
         val newTables = m.tables.map { case (table, mapping) =>
           val compacted = mapping.map { case (part, rel) =>
             val dir = new Path(s"$root/$rel")
-            val fs = fsOf(spark, dir)
-            val dataFiles = fs.listStatus(dir)
-              .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-                && !st.getPath.getName.startsWith("."))
-            if (part == FlatKey || dataFiles.length <= maxFilesPerPartition)
+            val files = dataFiles(spark, dir)
+            val nFiles = targetFileCount(files.map(_.getLen).sum, targetBytes)
+            if (part == FlatKey || files.length <= math.max(maxFilesPerPartition, nFiles))
               part -> rel   // carried forward by reference, untouched
             else {
               rewritten += 1
-              val bytes = dataFiles.map(_.getLen).sum
-              val nFiles = math.max(1L,
-                (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
               val outRel = s"data/$writeId/$table/$PartDirCol=$part"
               spark.read.parquet(dir.toString)
                 .coalesce(nFiles)

@@ -69,22 +69,19 @@ class ChunkIndexSpec extends SparkSpec {
   test("compact: fragmented partitions rewritten, others byte-identical, search unchanged") {
     val out = Files.createTempDirectory("graft_compact_idx").toString
     ChunkIndex.write(spark, sfDir, out)
-    // fragment a shard the way a daily-crawl cadence does: each MERGE
-    // cycle's rewrite of a touched partition unions the old files'
-    // read splits with the fresh batch, so the touched dir's file
-    // count creeps up one upsert at a time
+    // upserts write each partition they touch already compacted ...
     Seq(1000001L, 1000009L, 1000017L).foreach { id =>   // all shard 1
       val batch = spark.createDataFrame(Seq((id, s"fresh crawl doc $id text")))
         .toDF("doc_id", "text")
       ChunkIndex.upsert(spark, out, batch)
     }
+    // ... so fragment live partitions the way a writer that does not
+    // size its output would: one shard and one bucket as several files
+    ChunkIndexSpec.fragment(spark, out, "chunks", "1", 3)
+    ChunkIndexSpec.fragment(spark, out, "embeddings",
+      ChunkIndex.partitionDirs(spark, out, "embeddings").keys.min, 3)
 
-    def fileCount(dir: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).count(st => st.isFile
-        && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-    }
+    def fileCount(dir: String): Int = ChunkIndexSpec.fileCount(spark, dir)
     val dirsBefore = Seq("chunks", "embeddings")
       .map(t => t -> ChunkIndex.partitionDirs(spark, out, t)).toMap
     val countsBefore = dirsBefore.map { case (t, m) =>
@@ -211,5 +208,34 @@ class ChunkIndexSpec extends SparkSpec {
     // the upsert's row is still readable through the resolved state
     assert(ChunkIndex.readChunks(spark, out)
       .where(col("doc_id") === 2000001L).count() > 0)
+  }
+}
+
+object ChunkIndexSpec {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.SparkSession
+  import graft.sources.ManifestStore
+
+  /** Data files (writer markers excluded) in one partition dir. */
+  def fileCount(spark: SparkSession, dir: String): Int = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .count(st => st.isFile && !st.getPath.getName.startsWith("_")
+        && !st.getPath.getName.startsWith("."))
+  }
+
+  /** Fragment one live partition: rewrite its rows as `n` files under
+    * a fresh write dir and commit a manifest that points the partition
+    * there — the layout an unsized writer leaves behind.
+    */
+  def fragment(spark: SparkSession, root: String, table: String, part: String,
+      n: Int): Unit = {
+    val m = ManifestStore.current(spark, root).get
+    val rel = s"data/w-frag-${ManifestStore.newId()}/$table/_p=$part"
+    spark.read.parquet(s"$root/${m.table(table)(part)}")
+      .repartition(n).write.parquet(s"$root/$rel")
+    ManifestStore.commit(spark, root, m.copy(seq = m.seq + 1,
+      tables = m.tables.updated(table, m.table(table).updated(part, rel))))
+    assert(fileCount(spark, s"$root/$rel") == n, s"$table/$part: fewer than $n rows")
   }
 }

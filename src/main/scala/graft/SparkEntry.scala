@@ -566,7 +566,7 @@ object SparkEntry {
 
   /** Hashed-BoW embeddings of the literal query strings (qw) and of
     * every document (dw) — the oracle twin of Ingest.rawEmbed +
-    * normalizeLongForm.
+    * normalizeLongForm (and of Ingest.embedVector, its one-row form).
     */
   private val queriesCte =
     """queries(q_id, q_text) AS (

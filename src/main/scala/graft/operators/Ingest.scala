@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,9 +11,9 @@ import graft.sources.Tables
 /** The reference's ingestion pipeline (extract → chunk → embed →
   * normalize → index; core/management/commands/embed_pdfs.py:59
   * `process_pdfs`, core/supabase_utils.py:203 `ingest_document`)
-  * re-expressed as narrow, shuffle-free Spark transforms: chunking
-  * and embedding are per-row `explode`s that scale linearly — the
-  * 100 TB path needs no driver-side batching loop.
+  * re-expressed as Spark transforms: chunking is a per-row `explode`
+  * and embedding a per-document aggregation, both scaling linearly —
+  * the 100 TB path needs no batching loop outside the query.
   */
 object Ingest {
 
@@ -68,15 +68,31 @@ object Ingest {
   private[graft] def embedOf(docs: DataFrame): DataFrame =
     normalizeLongForm(rawEmbed(docs, col("doc_id"), col("text")), "doc_id")
 
-  /** Signed hashed-BoW counts: (idCol, dim, raw) — shared by docEmbed
-    * and text-query embedding (VectorSearch.knnText).
+  /** A token's hashed-BoW dimension and sign — THE one spelling of the
+    * hash and sign convention, shared by the long-form [[rawEmbed]]
+    * and the one-row [[embedVector]] (the oracle spells the same
+    * `md5` slices in SQL, SparkEntry.textEmbBody).
     */
-  private[graft] def rawEmbed(df: DataFrame, id: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column): DataFrame =
+  private def dimOf(tok: Column): Column = md5Long(tok, 1, 4) % EmbedDim
+  private def sgnOf(tok: Column): Column =
+    when(md5Long(tok, 5, 1) % 2 === 0, 1L).otherwise(-1L)
+
+  /** A raw signed count over its vector's L2 norm, round4 — with the
+    * reference's zero-norm guard: normalize() substitutes 1e-10 so
+    * zero vectors stay zero instead of NaN (core/utils.py:132). Shared
+    * by [[normalizeLongForm]] and [[embedVector]].
+    */
+  private def unitWeight(raw: Column, nrm: Column): Column =
+    Par.round4(raw / when(nrm === 0.0, 1e-10).otherwise(nrm))
+
+  /** Signed hashed-BoW counts: (idCol, dim, raw) — the long form behind
+    * docEmbed, the index build and upsert ([[embedOf]]) and
+    * [[pipelineIngest]]. Every row sharing an id is summed into one
+    * vector; query texts are embedded by [[embedVector]] instead.
+    */
+  private[graft] def rawEmbed(df: DataFrame, id: Column, text: Column): DataFrame =
     df.select(id.as("_id"), explode(tokens(text)).as("tok"))
-      .select(col("_id"),
-        (md5Long(col("tok"), 1, 4) % EmbedDim).as("dim"),
-        when(md5Long(col("tok"), 5, 1) % 2 === 0, 1L).otherwise(-1L).as("sgn"))
+      .select(col("_id"), dimOf(col("tok")).as("dim"), sgnOf(col("tok")).as("sgn"))
       .groupBy(col("_id"), col("dim"))
       .agg(sum(col("sgn")).as("raw"))
 
@@ -85,11 +101,34 @@ object Ingest {
     val w = Window.partitionBy(col("_id"))
     raw
       .withColumn("nrm", sqrt(sum(col("raw") * col("raw")).over(w)))
-      // zero-norm guard: reference normalize() substitutes 1e-10 so
-      // zero vectors stay zero instead of NaN (core/utils.py:132)
-      .withColumn("nrm", when(col("nrm") === 0.0, 1e-10).otherwise(col("nrm")))
-      .select(col("_id").as(idName), col("dim"),
-        Par.round4(col("raw") / col("nrm")).as("weight"))
+      .select(col("_id").as(idName), col("dim"), unitWeight(col("raw"), col("nrm")).as("weight"))
+  }
+
+  /** One text's normalized hashed-BoW embedding as a single row-local
+    * expression: `array<struct<dim: long, weight: double>>` sorted by
+    * dim, equal row for row to `normalizeLongForm(rawEmbed(...))` of
+    * that text alone — every dim a token hits is kept, including one
+    * whose signs cancel to weight 0 (the index's bucket choice sees
+    * it). Null text gives null (rawEmbed gives no rows).
+    *
+    * The tokens fold once into [[EmbedDim]] `(dim, n, raw)` slots; the
+    * finish lambda takes the squared norm in a second fold and emits
+    * the hit slots. Each sub-expression appears once in the tree, so
+    * the plan stays small to analyze. Over a local one-row frame the
+    * optimizer evaluates it (ConvertToLocalRelation): a query is
+    * embedded with no Spark job and no shuffle.
+    */
+  private[graft] def embedVector(text: Column): Column = {
+    val slots = array((0 until EmbedDim).map(d =>
+      struct(lit(d.toLong).as("dim"), lit(0L).as("n"), lit(0L).as("raw"))): _*)
+    val feats = transform(tokens(text), t => struct(dimOf(t).as("dim"), sgnOf(t).as("sgn")))
+    aggregate(feats, slots,
+      (acc, f) => transform(acc, s =>
+        when(s("dim") === f("dim"), struct(s("dim").as("dim"), (s("n") + 1L).as("n"),
+          (s("raw") + f("sgn")).as("raw"))).otherwise(s)),
+      acc => aggregate(acc, lit(0L), (sq, s) => sq + s("raw") * s("raw"),
+        sq => transform(filter(acc, s => s("n") > 0L), s =>
+          struct(s("dim").as("dim"), unitWeight(s("raw"), sqrt(sq)).as("weight")))))
   }
 
   /** Session-scoped cache of the hashed-BoW document index — the
@@ -530,10 +569,12 @@ object Ingest {
     * embed each chunk, emit normalized index rows — exactly what
     * `ingest_document` runs as a single transaction
     * (core/supabase_utils.py:203: extract → chunk → embed → store).
-    * Every stage is a narrow transform over the previous one, so
-    * Catalyst fuses the whole pipeline into one pass over the corpus:
-    * no stage boundary materializes, which is the point of declaring
-    * ingestion as a query instead of an imperative loop. Output:
+    * Extraction and chunking are narrow transforms that Catalyst fuses
+    * into one pass over the corpus; the embed step is two shuffles on
+    * the chunk key ([[rawEmbed]]'s `groupBy` and
+    * [[normalizeLongForm]]'s norm window), then the final sort. No
+    * imperative loop or batch boundary sits between the stages, which
+    * is the point of declaring ingestion as a query. Output:
     * (doc_id, page_no, chunk_index, dim, weight) — the long-form
     * index rows ChunkIndex persists.
     */

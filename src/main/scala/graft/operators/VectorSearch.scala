@@ -884,7 +884,7 @@ object VectorSearch {
     recallOf(annOpq(spark, dir).where(col("rk") <= 3), spark, dir)
 
   /** End-to-end text search: literal query strings → hashed-BoW
-    * embedding (Ingest.rawEmbed) → cosine against doc_embed vectors →
+    * embedding (Ingest.embedVector) → cosine against doc_embed vectors →
     * top-k docs. Mirror of search_similar_chunks (core/utils.py:194):
     * embed the query, inner-product against the normalized index.
     * Both sides are unit vectors so cosine == dot over the matching
@@ -933,11 +933,17 @@ object VectorSearch {
     * frame — the shared tail of knn_text and image_search: hashed-BoW
     * embed the queries, broadcast them, sparse-dot against the index
     * long form, bounded top-k.
+    *
+    * Each query row is embedded on its own by the row-local
+    * [[Ingest.embedVector]] (no shuffle), so `q_id` must be unique:
+    * the callers' ids are `standardQueries`' ordinals and
+    * image_search's `documents.doc_id`, the table's key.
     */
   private[operators] def searchByText(spark: SparkSession, dir: String,
       queries: DataFrame, k: Int): DataFrame = {
-    val qemb = Ingest.normalizeLongForm(
-      Ingest.rawEmbed(queries, col("q_id"), col("q_text")), "q_id")
+    val qemb = queries
+      .select(col("q_id"), Ingest.embedVector(col("q_text")).as("v"))
+      .select(col("q_id"), inline(col("v")))
       .select(col("q_id"), col("dim"), col("weight").as("qw"))
     val demb = Ingest.docEmbedCached(spark, dir)
       .select(col("doc_id"), col("dim"), col("weight").as("dw"))

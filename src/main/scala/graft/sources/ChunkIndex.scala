@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{functions, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Ingest
 
@@ -61,6 +62,28 @@ object ChunkIndex {
     */
   private[sources] val FlatKey = "__flat__"
   private val PartDirCol = "_p"
+
+  /** The data-file schema of each index table, exactly as [[write]] and
+    * [[upsert]] lay it out (DenseSearchSpec pins it against the written
+    * files). Every read of the index names it, so no read runs a
+    * parquet schema-inference job.
+    */
+  private[sources] val TableSchemas: Map[String, StructType] = Map(
+    "chunks" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("chunk_index", LongType),
+      StructField("chunk_text", StringType), StructField("chunk_chars", LongType),
+      StructField("shard", IntegerType))),
+    "embeddings" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("dim", LongType),
+      StructField("weight", DoubleType), StructField("bucket", IntegerType))))
+
+  /** Read data dirs of one index table with its known schema; no dir
+    * gives an empty local frame of that schema.
+    */
+  private def readDirs(spark: SparkSession, table: String, paths: Seq[String]): DataFrame =
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), TableSchemas(table))
+    else spark.read.schema(TableSchemas(table)).parquet(paths: _*)
 
   private def withShard(chunks: DataFrame): DataFrame =
     chunks.withColumn("shard", pmod(col("doc_id"), lit(ChunkShards.toLong)).cast("int"))
@@ -312,12 +335,9 @@ object ChunkIndex {
         val freshCk = fresh.localCheckpoint()
         val freshParts = freshCk.select(col(partCol)).distinct()
           .collect().map(_.get(0).toString).toSet
-        val paths = mapping.values.toSeq.map(r => s"$root/$r")
-        val olds =
-          if (paths.isEmpty) Set.empty[String]
-          else spark.read.parquet(paths: _*)
-            .join(functions.broadcast(ids), Seq("doc_id"), "left_semi")
-            .select(col(partCol)).distinct().collect().map(_.get(0).toString).toSet
+        val olds = readDirs(spark, table, mapping.values.toSeq.map(r => s"$root/$r"))
+          .join(functions.broadcast(ids), Seq("doc_id"), "left_semi")
+          .select(col(partCol)).distinct().collect().map(_.get(0).toString).toSet
         (freshCk, olds ++ freshParts)
     }
     // a flat (empty-table) dir holds no partition key: always rewrite it
@@ -326,11 +346,8 @@ object ChunkIndex {
     val bytes = parts.map { p =>
       p -> keepDirs.get(p).fold(0L)(r => dataFiles(spark, new Path(s"$root/$r")).map(_.getLen).sum)
     }.toMap
-    val keepPaths = keepDirs.values.toSeq.map(r => s"$root/$r")
-    val keep =
-      if (keepPaths.isEmpty) freshRows.limit(0)
-      else spark.read.parquet(keepPaths: _*)
-        .join(functions.broadcast(ids), Seq("doc_id"), "left_anti")
+    val keep = readDirs(spark, table, keepDirs.values.toSeq.map(r => s"$root/$r"))
+      .join(functions.broadcast(ids), Seq("doc_id"), "left_anti")
     // copy-on-write: keep is read from the OLD dirs and written to NEW
     // ones — no lineage-severing checkpoint needed, nothing overwrites
     // the files it reads
@@ -427,7 +444,7 @@ object ChunkIndex {
             else {
               rewritten += 1
               val outRel = s"data/$writeId/$table/$PartDirCol=$part"
-              spark.read.parquet(dir.toString)
+              readDirs(spark, table, Seq(dir.toString))
                 .coalesce(nFiles)
                 .write.mode(SaveMode.Overwrite).parquet(s"$root/$outRel")
               part -> outRel
@@ -514,8 +531,7 @@ object ChunkIndex {
   private def readTable(spark: SparkSession, root: String, table: String): DataFrame = {
     val m = currentManifest(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed index at $root"))
-    val paths = m.table(table).values.toSeq.sorted.map(r => s"$root/$r")
-    spark.read.parquet(paths: _*)
+    readDirs(spark, table, m.table(table).values.toSeq.sorted.map(r => s"$root/$r"))
   }
 
   /** Probe-pruned search over the persisted index: ONLY the probed
@@ -531,11 +547,8 @@ object ChunkIndex {
     val mapping = m.table("embeddings")
     val sel = queryBuckets.map(_.toString).flatMap(mapping.get) ++
       mapping.get(FlatKey)
-    val paths =
-      if (sel.nonEmpty) sel.map(r => s"$outPath/$r")
-      // no probed bucket exists: read one real dir for schema, filter to 0
-      else mapping.values.toSeq.sorted.take(1).map(r => s"$outPath/$r")
-    spark.read.parquet(paths: _*)
+    // no probed bucket exists: an empty frame, read from no dir at all
+    readDirs(spark, "embeddings", sel.map(r => s"$outPath/$r"))
       .where(col("bucket").isin(queryBuckets: _*))
   }
 
@@ -554,26 +567,37 @@ object ChunkIndex {
     * spelling of query prep and scoring serves both the direct
     * manifest path and the DSv2 connector path, so the two cannot
     * drift.
+    *
+    * The query is embedded with no Spark job ([[queryVector]]), its
+    * `nProbe` dominant dims (|weight| desc, then dim) name the probed
+    * buckets, and scoring is a filter to the query's dims with `qw`
+    * looked up in a literal map — no join, no broadcast. A warm call
+    * runs two jobs: the probed scan's partial aggregate (shuffle map
+    * stage) and the final aggregate's top-k.
     */
   private def searchImpl(spark: SparkSession, outPath: String, queryText: String,
       nProbe: Int, k: Int, probedOf: Seq[Long] => DataFrame): DataFrame = {
-    import spark.implicits._
-    val qRows = Ingest.normalizeLongForm(
-      Ingest.rawEmbed(Seq((1L, queryText)).toDF("q_id", "q_text"),
-        col("q_id"), col("q_text")), "q_id")
-      .select(col("dim"), col("weight").as("qw"))
-      .collect()   // one query vector: ≤ EmbedDim rows, ONE job
-    val buckets = qRows.sortBy(r => (-math.abs(r.getAs[Double]("qw")), r.getAs[Long]("dim")))
-      .take(nProbe).map(_.getAs[Long]("dim")).toSeq
-    // rebuild the broadcast side from the collected rows — re-using the
-    // uncached qemb frame would re-run the whole embed job in the join
-    val qemb = qRows.map(r => (r.getAs[Long]("dim"), r.getAs[Double]("qw")))
-      .toSeq.toDF("dim", "qw")
-    val probed = probedOf(buckets)
-    probed.join(functions.broadcast(qemb), Seq("dim"))
+    val q = queryVector(spark, queryText)
+    val buckets = q.sortBy { case (d, w) => (-math.abs(w), d) }.take(nProbe).map(_._1)
+    val qw = try_element_at(typedLit(q.toMap), col("dim"))
+    probedOf(buckets)
+      .where(col("dim").isin(q.map(_._1): _*))
       .groupBy(col("doc_id"))
-      .agg(graft.functions.Par.round4(sum(col("qw") * col("weight"))).as("score"))
+      .agg(graft.functions.Par.round4(sum(qw * col("weight"))).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
+  }
+
+  /** A query text's (dim, weight) pairs, sorted by dim:
+    * [[Ingest.embedVector]] selected over a local one-row frame, which
+    * the optimizer evaluates in place (no Spark job). A null text
+    * embeds to no dims, so it probes no bucket and scores no row.
+    */
+  private[sources] def queryVector(spark: SparkSession, text: String): Seq[(Long, Double)] = {
+    val v = spark.createDataFrame(java.util.List.of(Row(text)),
+        StructType(Seq(StructField("q_text", StringType))))
+      .select(Ingest.embedVector(col("q_text"))).collect().head
+    if (v.isNullAt(0)) Seq.empty
+    else v.getSeq[Row](0).map(e => (e.getLong(0), e.getDouble(1)))
   }
 }

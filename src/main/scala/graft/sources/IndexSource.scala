@@ -37,9 +37,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The snapshot is pinned when the Table object is materialized
   * (getTable); a concurrent upsert committing a new manifest is
   * invisible to an already-planned query (read-your-snapshot, same
-  * as readChunks). Schema inference happens once — getTable reuses
-  * the schema inferSchema already derived instead of re-reading
-  * parquet footers.
+  * as readChunks). No read infers a schema from parquet footers: the
+  * table's schema is the index's known one (ChunkIndex.TableSchemas)
+  * unless the caller passes its own.
   */
 class IndexSource extends TableProvider with DataSourceRegister {
 
@@ -87,15 +87,15 @@ object IndexSource {
         require(table == "embeddings",
           "option 'buckets' prunes the embeddings table's quantizer partitions")
         val want = bs.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val sel = all.filter { case (k, _) => want(k) || k == ChunkIndex.FlatKey }
-        // no probed partition exists: keep one real dir for schema —
-        // the caller's bucket filter reduces it to zero rows
-        // (searchBuckets' fallback, same contract)
-        if (sel.nonEmpty) sel else Map(all.toSeq.minBy(_._1))
+        // no probed partition exists: no dir at all — the table's
+        // schema is known, so an empty file list reads as zero rows
+        // (searchBuckets' contract)
+        all.filter { case (k, _) => want(k) || k == ChunkIndex.FlatKey }
     }
     val at = snapshot.map(s => s"@$s").getOrElse("")
     ParquetTable(s"graft-index($root$at).$table", spark, options,
-      dirs.values.toSeq.sorted, knownSchema, classOf[ParquetFileFormat])
+      dirs.values.toSeq.sorted, knownSchema.orElse(ChunkIndex.TableSchemas.get(table)),
+      classOf[ParquetFileFormat])
   }
 }
 

@@ -75,8 +75,8 @@ class IndexSourceSpec extends SparkSpec {
     // content parity with the library's direct bucket read
     val direct = ChunkIndex.searchBuckets(spark, root, probed)
     assert(pruned.where(col("bucket").isin(probed: _*)).count() == direct.count())
-    // a probe set with no committed partition still reads (schema via
-    // one real dir) and filters to zero rows
+    // a probe set with no committed partition still reads (the known
+    // schema over no dir) and filters to zero rows
     assert(spark.read.format("graft-index")
       .option("table", "embeddings").option("buckets", "999")
       .load(root).where(col("bucket") === 999L).count() == 0L)

@@ -55,18 +55,17 @@ object ChunkIndex {
 
   val ChunkShards = 8
 
-  /** Manifest key for a 0-row table written flat: an empty
-    * `partitionBy` write emits no schema-bearing footer at all and
-    * the table becomes unreadable (UNABLE_TO_INFER_SCHEMA on load),
-    * so empty tables land as one flat schema-bearing dir instead.
-    */
-  private[sources] val FlatKey = "__flat__"
   private val PartDirCol = "_p"
 
-  /** The data-file schema of each index table, exactly as [[write]] and
-    * [[upsert]] lay it out (DenseSearchSpec pins it against the written
-    * files). Every read of the index names it, so no read runs a
-    * parquet schema-inference job.
+  /** The data-file schema of each index table, exactly as [[upsert]]
+    * lays it out (DenseSearchSpec pins it against the written files).
+    * Every read of the index names it, so no read runs a parquet
+    * schema-inference job, and a table with no manifest entry (empty,
+    * or vacated by an upsert) reads as zero rows of this schema.
+    *
+    * A manifest written by an earlier version may still name a
+    * `__flat__` dir for an empty table: it holds 0 rows, a whole-table
+    * read reads it, and nothing else selects it.
     */
   private[sources] val TableSchemas: Map[String, StructType] = Map(
     "chunks" -> StructType(Seq(
@@ -149,47 +148,47 @@ object ChunkIndex {
     * duplicated into the throwaway [[PartDirCol]] for the directory
     * layout, so the real column stays in the data files.
     *
-    * A [[Sized]] layout clusters the rows first, so each partition
+    * The [[Sized]] layout clusters the rows first, so each partition
     * comes out of one write task, or out of [[targetFileCount]] tasks
     * (by a `doc_id` hash slot) when it spans several target files,
     * and lands already compacted; the write runs one task per target
-    * file of the partitions' total bytes. None keeps the plan's own
-    * task layout (the initial build, where no partition size is known
-    * yet).
+    * file of the partitions' total bytes. An empty `df` writes no
+    * partition dir and maps to nothing.
     */
   private def writeTablePartitions(spark: SparkSession, df: DataFrame,
       partCol: String, root: String, writeId: String, table: String,
-      sized: Option[Sized] = None): Map[String, String] = {
+      sized: Sized): Map[String, String] = {
     val rel = s"data/$writeId/$table"
-    val abs = s"$root/$rel"
-    if (df.isEmpty) {
-      df.write.mode(SaveMode.Overwrite).parquet(abs)
-      Map(FlatKey -> rel)
-    } else {
-      val laid = sized.fold(df) { case Sized(bytes, target) =>
-        val slots = bytes.map { case (p, b) => p.toInt -> targetFileCount(b, target) }
-          .filter(_._2 > 1)
-        val key =
-          if (slots.isEmpty) Seq(col(partCol))
-          else Seq(col(partCol), pmod(xxhash64(col("doc_id")),
-            coalesce(try_element_at(typedLit(slots), col(partCol)), lit(1)).cast("long")))
-        df.repartition(targetFileCount(bytes.values.sum, target), key: _*)
-      }
-      laid.withColumn(PartDirCol, col(partCol))
-        .write.mode(SaveMode.Overwrite).partitionBy(PartDirCol).parquet(abs)
-      val fs = fsOf(spark, new Path(abs))
-      fs.listStatus(new Path(abs)).map(_.getPath.getName)
-        .filter(_.startsWith(PartDirCol + "="))
-        .map(n => n.stripPrefix(PartDirCol + "=") -> s"$rel/$n")
-        .toMap
-    }
+    val abs = new Path(s"$root/$rel")
+    val slots = sized.bytes.map { case (p, b) => p.toInt -> targetFileCount(b, sized.targetBytes) }
+      .filter(_._2 > 1)
+    val key =
+      if (slots.isEmpty) Seq(col(partCol))
+      else Seq(col(partCol), pmod(xxhash64(col("doc_id")),
+        coalesce(try_element_at(typedLit(slots), col(partCol)), lit(1)).cast("long")))
+    df.repartition(targetFileCount(sized.bytes.values.sum, sized.targetBytes), key: _*)
+      .withColumn(PartDirCol, col(partCol))
+      .write.mode(SaveMode.Overwrite).partitionBy(PartDirCol).parquet(abs.toString)
+    fsOf(spark, abs).listStatus(abs).map(_.getPath.getName)
+      .filter(_.startsWith(PartDirCol + "="))
+      .map(n => n.stripPrefix(PartDirCol + "=") -> s"$rel/$n")
+      .toMap
   }
 
-  /** An upsert's write layout: the current bytes of every partition it
-    * rewrites (0 for one only its fresh rows occupy) and the target
-    * data-file size.
+  /** A write's layout: the estimated bytes of every partition it writes
+    * (its current dir's bytes, 0 for a new partition, plus an estimate
+    * of its fresh rows) and the target data-file size.
     */
   private final case class Sized(bytes: Map[String, Long], targetBytes: Long)
+
+  /** Fresh rows' bytes per unit the write already counts, kept below
+    * what the data files take (on the test corpora a chunk partition
+    * stores 0.49–0.62 bytes per byte of incoming text, an embedding row
+    * 3.5–118 bytes): an estimate under the written bytes only makes
+    * larger files, one over them would leave the next [[compact]] work.
+    */
+  private val TextBytesPerChunkByte = 4L
+  private val EmbeddingRowBytes = 2L
 
   /** The data files of one partition dir (writer markers excluded). */
   private def dataFiles(spark: SparkSession, dir: Path): Array[FileStatus] =
@@ -204,19 +203,27 @@ object ChunkIndex {
     math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
 
   /** Build and persist the index tables (embed_pdfs.py:220
-    * `build_and_save_index`) as the root's first commit. Both tables
-    * are partitioned — `chunks` by a doc_id shard, `embeddings` by
-    * the quantizer bucket — so incremental upserts rewrite only
-    * touched partitions.
+    * `build_and_save_index`) as the root's first commit: an [[upsert]]
+    * of every document into a root with no commit, so the build takes
+    * the one merge, layout and commit every later batch takes. Both
+    * tables are partitioned — `chunks` by a doc_id shard, `embeddings`
+    * by the quantizer bucket — so incremental upserts rewrite only
+    * touched partitions. The documents are read as they are, not
+    * spread ([[Tables.documentsSpread]]): each of the build's three
+    * reads would pay the spread's shuffle as a job of its own, and at
+    * sf0.1 the build takes about as long without it.
+    *
+    * A root that already has a commit is refused before any data is
+    * written: readers resolve the highest seq, so a second build
+    * committed as seq 1 would be hidden behind any later commit. Change
+    * an existing index with [[upsert]].
     */
   def write(spark: SparkSession, dir: String, outPath: String): Unit = {
-    val writeId = s"w-${newId()}"
-    val ch = writeTablePartitions(spark, withShard(Ingest.docChunk(spark, dir)),
-      "shard", outPath, writeId, "chunks")
-    val em = writeTablePartitions(spark, withBucket(Ingest.docEmbed(spark, dir)),
-      "bucket", outPath, writeId, "embeddings")
-    commit(spark, outPath,
-      Manifest(1L, Map("chunks" -> ch, "embeddings" -> em), indexParamDefaults))
+    currentManifest(spark, outPath).foreach { m =>
+      throw new IllegalStateException(s"index at $outPath already has commit " +
+        s"seq ${m.seq}: write builds a new index; upsert to change this one")
+    }
+    upsert(spark, outPath, Tables.documents(spark, dir).select(col("doc_id"), col("text")))
   }
 
   /** MERGE-style upsert of an incoming (doc_id, text) batch into the
@@ -230,18 +237,24 @@ object ChunkIndex {
     * other partition's files are untouched and carried forward by
     * reference in the new manifest.
     *
+    * A root with no commit merges against an empty base (seq 0, no
+    * tables, no parameters): nothing is read or dropped, and the
+    * commit is seq 1 — the first batch creates the index, and
+    * [[write]] is exactly this call over every document.
+    *
     * Each rewritten partition is written in its compacted layout —
-    * ⌈bytes / [[CompactTargetBytes]]⌉ files for the bytes of its
-    * current dir, one file for a partition the batch creates — so
+    * ⌈bytes / [[CompactTargetBytes]]⌉ files ([[Sized]]) for the bytes
+    * of its current dir plus an estimate of its fresh rows — so
     * [[compact]] finds nothing to rewrite in it (unless the merge
     * shrank it by more than a whole target file).
     *
     * The `chunks` side's shard is doc_id % [[ChunkShards]] — derivable
     * arithmetically from the incoming ids, and the fresh rows' shards
-    * are a subset of the same set — so only the `embeddings` side
-    * (whose bucket depends on vector content, old and new) pays an
-    * existence scan and a partition collect of its fresh rows; the
-    * scan is manifest-pruned to the two id columns.
+    * are a subset of the same set — so one aggregate of the incoming
+    * text names its partitions and sizes them, and only the
+    * `embeddings` side (whose bucket depends on vector content, old and
+    * new) pays an existence scan and a per-partition count of its fresh
+    * rows; the scan is manifest-pruned to the two id columns.
     *
     * ATOMICITY: both tables' new partitions are fully written before
     * the single manifest commit makes any of them visible, so the
@@ -256,55 +269,45 @@ object ChunkIndex {
   /** [[upsert]] with the target file size as a parameter (tests). */
   private[sources] def upsert(spark: SparkSession, outPath: String, incoming: DataFrame,
       targetBytes: Long): Unit = {
-    currentManifest(spark, outPath) match {
-      case None =>
-        // bootstrap: nothing to merge — the first batch creates the index
-        val writeId = s"w-${newId()}"
-        val ch = writeTablePartitions(spark, withShard(Ingest.chunksOf(incoming)),
-          "shard", outPath, writeId, "chunks")
-        val em = writeTablePartitions(spark, withBucket(Ingest.embedOf(incoming)),
-          "bucket", outPath, writeId, "embeddings")
-        commit(spark, outPath,
-          Manifest(1L, Map("chunks" -> ch, "embeddings" -> em), indexParamDefaults))
-      case Some(m) =>
-        val writeId = s"w-${newId()}"
-        val ids = incoming.select(col("doc_id")).distinct()
-        // the index's recorded identity must match THIS writer's
-        // parameters BEFORE any merge work runs: merging rows bucketed
-        // by a different embedding dimension (or shard count) into the
-        // old layout would silently corrupt the very identity
-        // searchPersisted validates against. Iterated over the
-        // WRITER'S keys (not the manifest's), so a recorded-but-
-        // unknown key carries forward untouched while a key the
-        // manifest is missing gets back-filled below instead of
-        // escaping validation forever. A pre-parameter manifest
-        // (graft's own earlier format — there is no foreign writer)
-        // gets stamped with the writer's parameters on this commit.
-        indexParamDefaults.foreach { case (k, mine) =>
-          m.params.get(k).foreach { v =>
-            if (mine != v) throw new IllegalStateException(
-              s"index at $outPath records $k=$v but this writer is built " +
-                s"with $k=$mine — refusing to mix layouts; rebuild the index")
-          }
-        }
-        // every shard an incoming doc can occupy, old or new, is a pure
-        // function of the ids — no table scan, no fresh-side collect
-        val chunkParts = Some(ids
-          .select(pmod(col("doc_id"), lit(ChunkShards.toLong)).cast("int").as("shard"))
-          .distinct().collect().map(_.get(0).toString).toSet)
-        val ch = upsertTable(spark, outPath, m.table("chunks"), "shard",
-          ids, withShard(Ingest.chunksOf(incoming)), chunkParts, writeId, "chunks",
-          targetBytes)
-        val em = upsertTable(spark, outPath, m.table("embeddings"), "bucket",
-          ids, withBucket(Ingest.embedOf(incoming)), None, writeId, "embeddings",
-          targetBytes)
-        // defaults-then-recorded: validated keys keep their recorded
-        // value, missing writer keys are back-filled, unknown recorded
-        // keys carry forward
-        commit(spark, outPath,
-          Manifest(m.seq + 1, Map("chunks" -> ch, "embeddings" -> em),
-            indexParamDefaults ++ m.params))
+    val m = currentManifest(spark, outPath).getOrElse(Manifest(0L, Map.empty))
+    val writeId = s"w-${newId()}"
+    val ids = incoming.select(col("doc_id")).distinct()
+    // the index's recorded identity must match THIS writer's
+    // parameters BEFORE any merge work runs: merging rows bucketed
+    // by a different embedding dimension (or shard count) into the
+    // old layout would silently corrupt the very identity
+    // searchPersisted validates against. Iterated over the
+    // WRITER'S keys (not the manifest's), so a recorded-but-
+    // unknown key carries forward untouched while a key the
+    // manifest is missing gets back-filled below instead of
+    // escaping validation forever. A pre-parameter manifest
+    // (graft's own earlier format — there is no foreign writer)
+    // gets stamped with the writer's parameters on this commit.
+    indexParamDefaults.foreach { case (k, mine) =>
+      m.params.get(k).foreach { v =>
+        if (mine != v) throw new IllegalStateException(
+          s"index at $outPath records $k=$v but this writer is built " +
+            s"with $k=$mine — refusing to mix layouts; rebuild the index")
+      }
     }
+    // every shard an incoming doc can occupy, old or new, is a pure
+    // function of the ids — no table scan; the same collect sums each
+    // shard's incoming text for the write's size estimate
+    val chunkParts = Some(withShard(incoming).groupBy(col("shard"))
+      .agg(coalesce(sum(octet_length(col("text"))), lit(0L)))
+      .collect().map(r => r.get(0).toString -> r.getLong(1) / TextBytesPerChunkByte).toMap)
+    val ch = upsertTable(spark, outPath, m.table("chunks"), "shard",
+      ids, withShard(Ingest.chunksOf(incoming)), chunkParts, writeId, "chunks",
+      targetBytes)
+    val em = upsertTable(spark, outPath, m.table("embeddings"), "bucket",
+      ids, withBucket(Ingest.embedOf(incoming)), None, writeId, "embeddings",
+      targetBytes)
+    // defaults-then-recorded: validated keys keep their recorded
+    // value, missing writer keys are back-filled, unknown recorded
+    // keys carry forward
+    commit(spark, outPath,
+      Manifest(m.seq + 1, Map("chunks" -> ch, "embeddings" -> em),
+        indexParamDefaults ++ m.params))
   }
 
   /** One table's copy-on-write merge: read ONLY the affected
@@ -312,54 +315,47 @@ object ChunkIndex {
     * is pruned by construction), drop the old versions of incoming
     * docs, write survivors + fresh rows under the new write dir, and
     * return the updated mapping. A partition the merge vacates is
-    * simply absent from it.
+    * simply absent from it; a table the merge vacates maps to nothing.
     *
-    * `touched` is the full set of partitions holding an old or a new
-    * version of an incoming doc when the caller can derive it without
-    * reading data; None finds it by scanning the old versions and
-    * collecting the fresh rows' partitions.
+    * `touched` maps every partition holding an old or a new version of
+    * an incoming doc to its fresh rows' estimated bytes when the caller
+    * can derive it without reading data; None finds it by scanning the
+    * old versions and counting the fresh rows per partition.
     *
-    * The write is [[Sized]] by each affected partition's current dir:
-    * it gets [[targetFileCount]] of those bytes in files (1 for a
-    * partition only the fresh rows occupy), the count [[compact]]
-    * accepts as compacted.
+    * The write is [[Sized]] by each affected partition's current dir
+    * plus its fresh estimate: it gets [[targetFileCount]] of those
+    * bytes in files, the count [[compact]] accepts as compacted.
     */
   private def upsertTable(spark: SparkSession, root: String,
       mapping: Map[String, String], partCol: String, ids: DataFrame,
-      fresh: DataFrame, touched: Option[Set[String]], writeId: String,
+      fresh: DataFrame, touched: Option[Map[String, Long]], writeId: String,
       table: String, targetBytes: Long): Map[String, String] = {
-    val (freshRows, parts) = touched match {
-      case Some(ps) => (fresh, ps)
+    val (freshRows, freshBytes, olds) = touched match {
+      case Some(ps) => (fresh, ps, Set.empty[String])
       case None =>
-        // fresh feeds two jobs (partition list + merged write): materialize once
+        // fresh feeds two jobs (per-partition count + merged write): materialize once
         val freshCk = fresh.localCheckpoint()
-        val freshParts = freshCk.select(col(partCol)).distinct()
-          .collect().map(_.get(0).toString).toSet
+        val counts = freshCk.groupBy(col(partCol)).count().collect()
+          .map(r => r.get(0).toString -> r.getLong(1) * EmbeddingRowBytes).toMap
         val olds = readDirs(spark, table, mapping.values.toSeq.map(r => s"$root/$r"))
           .join(functions.broadcast(ids), Seq("doc_id"), "left_semi")
           .select(col(partCol)).distinct().collect().map(_.get(0).toString).toSet
-        (freshCk, olds ++ freshParts)
+        (freshCk, counts, olds)
     }
-    // a flat (empty-table) dir holds no partition key: always rewrite it
-    val affected = parts + FlatKey
-    val keepDirs = mapping.filter(kv => affected(kv._1))
+    val parts = olds ++ freshBytes.keySet
+    val keepDirs = mapping.filter(kv => parts(kv._1))
     val bytes = parts.map { p =>
-      p -> keepDirs.get(p).fold(0L)(r => dataFiles(spark, new Path(s"$root/$r")).map(_.getLen).sum)
+      p -> (freshBytes.getOrElse(p, 0L) +
+        keepDirs.get(p).fold(0L)(r => dataFiles(spark, new Path(s"$root/$r")).map(_.getLen).sum))
     }.toMap
     val keep = readDirs(spark, table, keepDirs.values.toSeq.map(r => s"$root/$r"))
       .join(functions.broadcast(ids), Seq("doc_id"), "left_anti")
     // copy-on-write: keep is read from the OLD dirs and written to NEW
     // ones — no lineage-severing checkpoint needed, nothing overwrites
     // the files it reads
-    val written = writeTablePartitions(spark,
+    (mapping -- parts) ++ writeTablePartitions(spark,
       keep.unionByName(freshRows.select(keep.columns.map(col).toIndexedSeq: _*)),
-      partCol, root, writeId, table, Some(Sized(bytes, targetBytes)))
-    val carried = (mapping -- affected).filterNot(_._1 == FlatKey)
-    // an all-vacated merge writes a flat empty dir; drop it if real
-    // partitions survive elsewhere
-    val w = if (written.keySet == Set(FlatKey) && carried.nonEmpty) Map.empty[String, String]
-            else written
-    carried ++ w
+      partCol, root, writeId, table, Sized(bytes, targetBytes))
   }
 
   /** Live incremental indexing: a Structured Streaming sink that
@@ -390,12 +386,13 @@ object ChunkIndex {
 
   /** Compact OVER-FRAGMENTED partitions of the persisted index — the
     * maintenance pass for partitions whose file count crept upward:
-    * dirs written by the initial build's task layout, by an earlier
-    * writer, or by any path that does not size its output (a year of
-    * such micro-batches is the classic small-files death: every
-    * search probing that bucket opens them all). [[upsert]] already
-    * writes each touched partition in the layout this pass produces,
-    * so an upsert cycle leaves it nothing to rewrite.
+    * dirs written by an earlier writer, by any path that does not size
+    * its output (a year of such micro-batches is the classic
+    * small-files death: every search probing that bucket opens them
+    * all), or by an upsert whose fresh-size estimate ran over. [[write]]
+    * and [[upsert]] already write each partition in the layout this
+    * pass produces, so a build or an upsert cycle leaves it nothing to
+    * rewrite.
     *
     * Manifest-aware and copy-on-write, like [[upsert]]: for each
     * table, a LIVE partition is rewritten only when it holds more
@@ -439,7 +436,7 @@ object ChunkIndex {
             val dir = new Path(s"$root/$rel")
             val files = dataFiles(spark, dir)
             val nFiles = targetFileCount(files.map(_.getLen).sum, targetBytes)
-            if (part == FlatKey || files.length <= math.max(maxFilesPerPartition, nFiles))
+            if (files.length <= math.max(maxFilesPerPartition, nFiles))
               part -> rel   // carried forward by reference, untouched
             else {
               rewritten += 1
@@ -505,8 +502,7 @@ object ChunkIndex {
       spark.read.format("graft-index")
         .option("table", "embeddings")
         .option("buckets", buckets.mkString(","))
-        .load(root)
-        .where(col("bucket").isin(buckets: _*)))
+        .load(root))
   }
 
   /** Load the persisted index (core/utils.py:150 `load_index` /
@@ -537,19 +533,16 @@ object ChunkIndex {
   /** Probe-pruned search over the persisted index: ONLY the probed
     * buckets' directories are read at all — the manifest maps bucket
     * → dir, so pruning is explicit path selection, no partition
-    * discovery or scan-time filtering involved. (The residual filter
-    * only matters for a flat empty-table dir.)
+    * discovery or scan-time filtering involved.
     */
   def searchBuckets(spark: SparkSession, outPath: String,
       queryBuckets: Seq[Long]): DataFrame = {
     val m = currentManifest(spark, outPath).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed index at $outPath"))
     val mapping = m.table("embeddings")
-    val sel = queryBuckets.map(_.toString).flatMap(mapping.get) ++
-      mapping.get(FlatKey)
     // no probed bucket exists: an empty frame, read from no dir at all
-    readDirs(spark, "embeddings", sel.map(r => s"$outPath/$r"))
-      .where(col("bucket").isin(queryBuckets: _*))
+    readDirs(spark, "embeddings",
+      queryBuckets.map(_.toString).flatMap(mapping.get).map(r => s"$outPath/$r"))
   }
 
   /** End-to-end text search against the PERSISTED index: embed the

@@ -74,9 +74,10 @@ object IndexSource {
       knownSchema: Option[StructType] = None): ParquetTable = {
     require(Tables(table),
       s"unknown index table '$table' (expected one of ${Tables.mkString(", ")})")
-    val all = ChunkIndex.partitionDirs(spark, root, table, snapshot)
-    if (all.isEmpty)
-      throw new java.io.FileNotFoundException(s"no committed index at $root")
+    // a committed table with no entry (empty, or vacated) is no dir
+    val all = ManifestStore.at(spark, root, snapshot).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed index at $root"))
+      .table(table).map { case (p, rel) => p -> s"$root/$rel" }
     // manifest-level partition pruning: option("buckets", "3,7")
     // restricts the table's FILE LIST to the named partitions' dirs —
     // the connector twin of ChunkIndex.searchBuckets, so probing
@@ -90,7 +91,7 @@ object IndexSource {
         // no probed partition exists: no dir at all — the table's
         // schema is known, so an empty file list reads as zero rows
         // (searchBuckets' contract)
-        all.filter { case (k, _) => want(k) || k == ChunkIndex.FlatKey }
+        all.filter { case (k, _) => want(k) }
     }
     val at = snapshot.map(s => s"@$s").getOrElse("")
     ParquetTable(s"graft-index($root$at).$table", spark, options,

@@ -25,4 +25,25 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs started while `f` runs; the listener bus is async, so
+    * wait until the count is stable before reading it.
+    */
+  def jobsDuring(spark: SparkSession)(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      var last = -1
+      var spins = 0
+      while (jobs.get() != last && spins < 30) {
+        last = jobs.get(); Thread.sleep(100); spins += 1
+      }
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -9,13 +9,16 @@ import org.apache.spark.sql.functions._
 import graft.{ChunkIndexSpec, SparkSpec}
 import graft.operators.Ingest
 
-/** The write layout of [[ChunkIndex.upsert]]: every partition an upsert
-  * rewrites lands in the layout [[ChunkIndex.compact]] would give it,
-  * and compact leaves partitions that are at their target alone.
+/** The one write path of the index ([[ChunkIndex.write]] is an
+  * [[ChunkIndex.upsert]] into a root with no commit): every partition a
+  * build or an upsert writes lands in the layout [[ChunkIndex.compact]]
+  * would give it, compact leaves partitions that are at their target
+  * alone, and a vacated table is no manifest entry at all.
   */
 class ChunkIndexLayoutSpec extends SparkSpec {
 
   private val sf01 = s"${new java.io.File(sfDir).getParent}/sf0.01"
+  private val sf1 = s"${new java.io.File(sfDir).getParent}/sf0.1"
 
   private def fileCount(dir: String): Int = ChunkIndexSpec.fileCount(spark, dir)
 
@@ -44,15 +47,97 @@ class ChunkIndexLayoutSpec extends SparkSpec {
     e.minBy { case (d, w) => (-math.abs(w), d) }._1
   }
 
-  /** A fresh index compacted to one file per partition, so any file
-    * count above one afterwards is the upsert's.
+  /** A fresh index: the build already writes one file per partition,
+    * so compact finds nothing, and any file count above one afterwards
+    * is the upsert's.
     */
   private def compactedIndex(dir: String, name: String): String = {
     val out = Files.createTempDirectory(name).toString
     ChunkIndex.write(spark, dir, out)
-    ChunkIndex.compact(spark, out, 1)
+    assert(ChunkIndex.compact(spark, out, 1) === 0)
     assert(dirs(out).values.forall(fileCount(_) == 1))
     out
+  }
+
+  test("a build writes each partition as one file: compact finds nothing at sf0.01 and sf0.1") {
+    Seq(sf01, sf1).foreach(compactedIndex(_, "graft_layout_build"))
+  }
+
+  test("a build, and an upsert larger than its base, split a bucket past the target") {
+    val docs = Tables.documents(spark, sf01).select("doc_id", "text")
+    // a target of a quarter of the largest bucket's bytes in one file
+    val small = dirs(compactedIndex(sf01, "graft_layout_ref"))
+      .collect { case (("embeddings", _), d) => bytesOf(d) }.max / 4
+    val empty = Files.createTempDirectory("graft_layout_sized_build").toString
+    val base = Files.createTempDirectory("graft_layout_sized_base").toString
+    ChunkIndex.upsert(spark, base, docs.orderBy("doc_id").limit(10)
+      .select(col("doc_id"), concat(lit("stale text of doc "), col("doc_id").cast("string")).as("text")))
+    for (out <- Seq(empty, base)) {
+      ChunkIndex.upsert(spark, out, docs, small)
+      val big = dirs(out).collect { case (("embeddings", _), d) => d }.maxBy(bytesOf)
+      assert(fileCount(big) >= 2, s"$out: largest bucket written as one file")
+      assert(rows(ChunkIndex.readEmbeddings(spark, out).drop("bucket")) ===
+        rows(Ingest.embedOf(docs)))
+      assert(rows(ChunkIndex.readChunks(spark, out).drop("shard")) ===
+        rows(Ingest.chunksOf(docs)))
+      assert(ChunkIndex.compact(spark, out, 1, small) === 0)
+    }
+  }
+
+  test("write onto a root that already has a commit throws and leaves the build as it was") {
+    val out = Files.createTempDirectory("graft_layout_twice").toString
+    ChunkIndex.write(spark, sfDir, out)
+    val before = (rows(ChunkIndex.readChunks(spark, out)), rows(ChunkIndex.readEmbeddings(spark, out)))
+    val data = new java.io.File(out, "data").list().toSet
+    val e = intercept[IllegalStateException](ChunkIndex.write(spark, sf01, out))
+    assert(e.getMessage.contains(out), e.getMessage)
+    assert(new java.io.File(out, "data").list().toSet === data, "the refused write left data")
+    assert(ManifestStore.current(spark, out).map(_.seq) === Some(1L))
+    assert((rows(ChunkIndex.readChunks(spark, out)), rows(ChunkIndex.readEmbeddings(spark, out))) ===
+      before)
+  }
+
+  test("an upsert that vacates a table leaves it no entry; reads are empty, the next upsert refills") {
+    import spark.implicits._
+    // a null text has no chunks and no embedding; an empty text has no
+    // chunks, but splits into one empty token, which embeds
+    for ((text, vacated) <- Seq[(String, Set[String])](
+        (null, Set("chunks", "embeddings")), ("", Set("chunks")))) {
+      val out = Files.createTempDirectory("graft_layout_vacate").toString
+      ChunkIndex.upsert(spark, out, Seq((5L, "hash join table")).toDF("doc_id", "text"))
+      val batch = Seq[(Long, String)]((5L, text)).toDF("doc_id", "text")
+      ChunkIndex.upsert(spark, out, batch)
+      assert(dirs(out).keySet.map(_._1) === Set("chunks", "embeddings") -- vacated, s"text '$text'")
+      for (t <- vacated) {
+        val df = if (t == "chunks") ChunkIndex.readChunks(spark, out) else ChunkIndex.readEmbeddings(spark, out)
+        assert(df.schema === ChunkIndex.TableSchemas(t) && df.count() === 0, t)
+        assert(spark.read.format("graft-index").option("table", t).load(out).count() === 0, t)
+      }
+      if (vacated.contains("embeddings")) {
+        assert(spark.read.format("graft-index").option("table", "embeddings")
+          .option("buckets", "0,1,2").load(out).count() === 0)
+        assert(ChunkIndex.search(spark, out, "hash join table", 2, 5).collect().isEmpty)
+      } else assert(rows(ChunkIndex.readEmbeddings(spark, out).drop("bucket")) ===
+        rows(Ingest.embedOf(batch)))
+      ChunkIndex.upsert(spark, out, Seq((5L, "spark batch join")).toDF("doc_id", "text"))
+      assert(ChunkIndex.readChunks(spark, out).select("doc_id").distinct().collect()
+        .map(_.getLong(0)).toSeq === Seq(5L))
+      assert(ChunkIndex.search(spark, out, "spark batch join", 2, 5).collect()
+        .map(_.getAs[Long]("doc_id")).toSeq === Seq(5L))
+    }
+  }
+
+  /** The merged plan runs once per table, in its write: no emptiness
+    * check runs it first.
+    */
+  test("a warm one-document upsert on the sf0.01 index runs at most 16 Spark jobs") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_layout_jobs").toString
+    ChunkIndex.write(spark, sf01, out)
+    ChunkIndex.upsert(spark, out, Seq((3L, "a warm up batch")).toDF("doc_id", "text"))
+    val n = SparkSpec.jobsDuring(spark)(
+      ChunkIndex.upsert(spark, out, Seq((4L, "one document upsert")).toDF("doc_id", "text")))
+    assert(n <= 16, s"a one-document upsert ran $n jobs")
   }
 
   test("upsert at sf0.01 writes each touched partition as one file; compact finds nothing") {
@@ -88,7 +173,7 @@ class ChunkIndexLayoutSpec extends SparkSpec {
     val batch = spark.createDataFrame(Seq((moved, text), (11L, "rewritten doc eleven"),
       (4000001L, "brand new doc"))).toDF("doc_id", "text")
     val ids = batch.select("doc_id")
-    // the batch's own rows, laid out by the bootstrap write
+    // the batch's own rows, written into an empty root
     val alone = Files.createTempDirectory("graft_layout_alone").toString
     ChunkIndex.upsert(spark, alone, batch)
     val expectChunks = rows(chunksBefore.join(ids, Seq("doc_id"), "left_anti")

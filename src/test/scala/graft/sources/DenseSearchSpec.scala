@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -60,26 +59,7 @@ class DenseSearchSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
   }
 
-  /** Spark jobs started while `f` runs; the listener bus is async, so
-    * wait until the count is stable before reading it.
-    */
-  private def jobsDuring(f: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 30) {
-        last = jobs.get(); Thread.sleep(100); spins += 1
-      }
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring(f: => Unit): Int = SparkSpec.jobsDuring(spark)(f)
 
   test("embedVector equals normalizeLongForm(rawEmbed) bit for bit, sorted by dim") {
     val (a, b) = cancelPair

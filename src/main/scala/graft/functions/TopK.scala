@@ -23,17 +23,13 @@ private[functions] case class TopBuf(items: Seq[ScoredId])
   */
 class TopKAgg(k: Int) extends Aggregator[ScoredId, TopBuf, Seq[ScoredId]] {
 
-  private def better(a: ScoredId, b: ScoredId): Boolean =
-    a.score > b.score || (a.score == b.score && a.id < b.id)
-
-  private def trim(items: Seq[ScoredId]): Seq[ScoredId] =
-    items.sortWith(better).take(k)
+  private def trim(items: Seq[ScoredId]): Seq[ScoredId] = TopK.best(k, items)
 
   override def zero: TopBuf = TopBuf(Vector.empty)
 
   override def reduce(b: TopBuf, a: ScoredId): TopBuf =
     // admit only candidates that beat the current k-th element
-    if (b.items.length < k || better(a, b.items.last)) TopBuf(trim(b.items :+ a))
+    if (b.items.length < k || TopK.better(a, b.items.last)) TopBuf(trim(b.items :+ a))
     else b
 
   override def merge(b1: TopBuf, b2: TopBuf): TopBuf =
@@ -85,6 +81,34 @@ class TopK2Agg(k: Int) extends Aggregator[Scored2Id, Top2Buf, Seq[Scored2Id]] {
 }
 
 object TopK {
+  /** THE top-k order of [[ScoredId]]s: score desc, then id asc. Shared
+    * by [[TopKAgg]] and the partition-local [[perGroup]], so a
+    * shuffled and a driver-merged top-k rank the same rows alike.
+    */
+  def better(a: ScoredId, b: ScoredId): Boolean =
+    a.score > b.score || (a.score == b.score && a.id < b.id)
+
+  /** The k best of `items`, best first. */
+  def best(k: Int, items: Seq[ScoredId]): Seq[ScoredId] =
+    items.sortWith(better).take(k)
+
+  /** The k best candidates of each group in one pass over `rows`, best
+    * first, groups in first-seen order: a bounded heap per group, so a
+    * partition holds at most k candidates per group however many rows
+    * it scans. The partial a driver merges with [[best]].
+    */
+  def perGroup[G](k: Int, rows: Iterator[(G, ScoredId)]): Iterator[(G, Seq[ScoredId])] = {
+    // max-heap under "worse is larger": the head is the group's k-th best
+    val worstFirst = Ordering.fromLessThan(better)
+    val heaps = scala.collection.mutable.LinkedHashMap[G, scala.collection.mutable.PriorityQueue[ScoredId]]()
+    rows.foreach { case (g, s) =>
+      val h = heaps.getOrElseUpdate(g, scala.collection.mutable.PriorityQueue.empty(worstFirst))
+      if (h.size < k) h.enqueue(s)
+      else if (better(s, h.head)) { h.dequeue(); h.enqueue(s) }
+    }
+    heaps.iterator.map { case (g, h) => g -> best(k, h.toSeq) }
+  }
+
   /** `top_k(score, id)` aggregate Column, k best per group. */
   def topK(k: Int)(score: Column, id: Column): Column =
     udaf(new TopKAgg(k)).apply(score, id)

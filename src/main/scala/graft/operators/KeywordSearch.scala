@@ -1,10 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession, graftBridge}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.{Par, TopK}
+import graft.functions.{Par, ScoredId, TopK}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -28,9 +34,10 @@ object KeywordSearch {
   /** The standard query set's shard list — a pure function of
     * [[StandardQueryTexts]] under the same split-on-space
     * tokenization as `tokens()`; KeywordSearchSpec asserts this set
-    * equals the Spark-computed shards of the actual qtok frame, so a
-    * drift in EITHER the query list or the tokenization rule fails a
-    * test instead of silently pruning matching postings away.
+    * equals the Spark-computed shards of the standard queries'
+    * tokens, so a drift in EITHER the query list or the tokenization
+    * rule fails a test instead of silently pruning matching postings
+    * away.
     */
   private[graft] def standardQueryShards: Seq[Long] =
     StandardQueryTexts.flatMap(_.split(" ")).distinct
@@ -127,15 +134,19 @@ object KeywordSearch {
     * (_did, _dl, _tok, _tf) postings, each carrying its token's df and
     * the corpus's N/Σdl — is a session memo ([[bm25Corpus]]),
     * hash-partitioned by document and built on a corpus's first call;
-    * every later call over the same corpus reuses it. A call
-    * tokenizes its queries, joins the query tokens (broadcast)
-    * against the memo, folds the terms per (query, doc) inside the
-    * memo's document partitions and takes the per-query top-k via the
-    * map-side combining TopKAgg — one shuffle of ≤ k rows per query
-    * and partition.
+    * every later call over the same corpus reuses it. A call is
+    * EAGER: it collects its queries' tokens to the driver (no job
+    * over a local `queries` frame), then runs ONE Spark job over the
+    * memo — filter to the query vocabulary, fold the terms per
+    * (query, doc) inside the memo's document partitions, keep each
+    * partition's k best rows per query — and merges those partials on
+    * the driver ([[bm25Score]]). No broadcast, no shuffle: the driver
+    * receives at most k rows per query and memo partition.
     *
-    * `idCol` must be long-castable; output is
-    * (`qIdCol`, `idCol`, score, rk), k rows per query.
+    * `idCol` must be long-castable; output is a local frame of
+    * (`qIdCol` with the queries' id type, `idCol`, score, rk), up to
+    * k rows per query, queries in first-appearance order, each in
+    * rank order.
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qIdCol: String, qTextCol: String,
@@ -151,9 +162,7 @@ object KeywordSearch {
     // the identical IEEE expression tree
     val k1p1 = k1 + 1.0
     val oneMinusB = 1.0 - b
-    val qtok = queries.select(col(qIdCol).as("_qid"),
-      explode(array_distinct(tokens(col(qTextCol)))).as("_tok"))
-    bm25Score(bm25Corpus(docs, idCol, textCol), qtok, qIdCol, idCol,
+    bm25Score(bm25Corpus(docs, idCol, textCol), queries, qIdCol, qTextCol, idCol,
       k, k1p1, k1, b, oneMinusB)
   }
 
@@ -163,18 +172,19 @@ object KeywordSearch {
     * corpus switch releases the previous one's. The memo is
     * `persist`ed: lost blocks recompute from lineage.
     *
-    * Key: the memo plan's semanticHash (its canonicalized analyzed
-    * plan over `docs`, with `idCol`/`textCol` in it) plus the input
-    * fingerprint of `docs.inputFiles` — a parquet dir rewritten
-    * mid-session lists new files, so the next call recomputes. A hit
-    * must also be `sameResult` with this call's plan: a hash collision
-    * never serves another corpus's postings. A non-deterministic
-    * `docs` plan (or that collision) is not memoized; its postings are
-    * materialized once for this call, so the df, stats and scoring
-    * sides all see the same rows.
+    * Key: `idCol`, `textCol`, the semanticHash of `docs`' own analyzed
+    * plan, and the input fingerprint of `docs.inputFiles` — a parquet
+    * dir rewritten mid-session lists new files, so the next call
+    * recomputes. A hit must also have been built from a `docs` plan
+    * that is `sameResult` with this call's: a hash collision never
+    * serves another corpus's postings. A hit builds no memo plan; only
+    * a miss does. A non-deterministic `docs` plan (or that collision)
+    * is not memoized; its postings are materialized once for this
+    * call, so the df, stats and scoring sides all see the same rows.
     */
-  private def bm25Corpus(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private[graft] def bm25Corpus(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = docs.sparkSession
+    def postOf(d: DataFrame): DataFrame = bm25PostingsOf(bm25Docs(d, idCol, textCol))
     // the df join is a sort-merge join: a broadcast hashed relation
     // would stay reachable from the cached plan, pinning a whole
     // memory page for the memo's lifetime. Hash-partitioned by
@@ -182,18 +192,25 @@ object KeywordSearch {
     def corpus(post: DataFrame): DataFrame =
       bm25Scorable(post, bm25DfOf(post).hint("merge"), bm25StatsOf(post))
         .repartition(col("_did"))
-    val post = bm25PostingsOf(bm25Docs(docs, idCol, textCol))
-    val memoable = corpus(post)
-    val plan = memoable.queryExecution.analyzed
-    val hit = if (!plan.deterministic) None else {
-      val tag = s"$idCol:$textCol:${plan.semanticHash()}:" +
+    val src = docs.queryExecution.analyzed
+    val hit = if (!src.deterministic) None else {
+      val tag = s"$idCol:$textCol:${src.semanticHash()}:" +
         graft.DfCache.inputFingerprint(spark, docs.inputFiles.toIndexedSeq: _*)
+      // the alias marks the source plan inside the memo's own plan,
+      // where the guard below finds it
       Some(graft.DfCache.getOrComputeRotating(spark, "bm25_corpus", tag)(
-        memoable.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+        corpus(postOf(docs.as(Bm25Source)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     }
-    hit.filter(_.queryExecution.analyzed.sameResult(plan))
-      .getOrElse(corpus(post.localCheckpoint()))
+    def sourceOf(memo: DataFrame) = memo.queryExecution.analyzed.collectFirst {
+      case a: SubqueryAlias if a.alias == Bm25Source => a.child
+    }
+    hit.filter(sourceOf(_).exists(_.sameResult(src)))
+      .getOrElse(corpus(postOf(docs).localCheckpoint()))
   }
+
+  /** The alias that marks `docs`' plan inside a [[bm25Corpus]] memo. */
+  private val Bm25Source = "_bm25_source"
 
   /** (_did, _dl, _toks) corpus frame. NULL text is excluded from the
     * corpus (and from N/avgdl) on BOTH sides — Spark's size(NULL) =
@@ -237,31 +254,60 @@ object KeywordSearch {
       stats: DataFrame): DataFrame =
     post.join(dfreq, "_tok").crossJoin(broadcast(stats))
 
-  /** BM25 scoring of [[bm25Scorable]] rows (full-corpus or
-    * vocab-pruned) against query tokens (_qid,_tok). The query side
-    * broadcasts; the (query, doc) term fold shuffles only if the rows
-    * are not already partitioned by document.
+  /** BM25 top-k of `queries` over [[bm25Scorable]] rows, run now, as a
+    * local frame — the one query side and top-k of both bm25 paths.
+    *
+    * The query side is driver-side literals, not a join: each query
+    * row's distinct tokens are collected (no job over a local frame),
+    * the rows are filtered to that vocabulary (`_tok IN (…)`), and
+    * each row takes its query ids from a literal map token → ids, one
+    * id per query row holding the token — a `q_id` repeated across
+    * rows pools their tokens, as a join on the token does. The ids
+    * are literals of the queries' own id type.
+    *
+    * The (query, doc) term fold runs where the rows are (no shuffle
+    * when they are partitioned by document); each partition then keeps
+    * its k best rows per query (`TopK.perGroup`), one job collects
+    * them, and the driver merges them in the same order
+    * (`TopK.best`).
     */
   private def bm25Score(scorable: DataFrame,
-      qtok: DataFrame, qIdCol: String, idCol: String,
+      queries: DataFrame, qIdCol: String, qTextCol: String, idCol: String,
       k: Int, k1p1: Double, k1: Double, b: Double, oneMinusB: Double): DataFrame = {
+    val qs = queries.select(col(qIdCol), array_distinct(tokens(col(qTextCol))))
+    val qRows = qs.collect().toSeq
+    val qIdType = qs.schema.head.dataType
+    val idsOf: Map[String, Seq[Any]] = qRows
+      .flatMap(r => if (r.isNullAt(1)) Nil else r.getSeq[String](1).map(_ -> r.get(0)))
+      .groupMap(_._1)(_._2)
+    val idsType = MapType(StringType, ArrayType(qIdType, containsNull = true),
+      valueContainsNull = false)
+    val ids = graftBridge.columnOf(Literal(
+      CatalystTypeConverters.createToCatalystConverter(idsType)(idsOf), idsType))
     val avgdl = col("_sum_dl").cast("double") / col("_n_docs")
     val idf = (col("_n_docs") - col("_df") + lit(0.5)) / (col("_df") + lit(0.5))
     val tfNorm = (col("_tf") * lit(k1p1)) /
       (col("_tf") + lit(k1) * (lit(oneMinusB) + (lit(b) * col("_dl")) / avgdl))
-    scorable.join(broadcast(qtok), "_tok")
-      .select(col("_qid"), col("_did"), col("_tok"), (idf * tfNorm).as("_term"))
+    val scored = scorable.where(col("_tok").isin(idsOf.keys.toSeq: _*))
+      .select(explode(try_element_at(ids, col("_tok"))).as("_qid"), col("_did"),
+        col("_tok"), (idf * tfNorm).as("_term"))
       .groupBy(col("_qid"), col("_did"))
       .agg(collect_list(struct(col("_tok"), col("_term"))).as("_ts"))
       .select(col("_qid"), col("_did"),
         Par.round4(aggregate(
           transform(array_sort(col("_ts")), s => s.getField("_term")),
           lit(0.0), (a, x) => a + x)).as("_score"))
-      .groupBy(col("_qid"))
-      .agg(TopK.topK(k)(col("_score"), col("_did")).as("_top"))
-      .select(col("_qid"), posexplode(col("_top")).as(Seq("_i", "_hit")))
-      .select(col("_qid").as(qIdCol), col("_hit.id").as(idCol),
-        col("_hit.score").as("score"), (col("_i") + 1).cast("long").as("rk"))
+    def scoredId(r: Row) = ScoredId(r.getDouble(2), r.getLong(1))
+    val partials = scored
+      .mapPartitions(rows => TopK.perGroup(k, rows.map(r => r.get(0) -> scoredId(r)))
+        .flatMap { case (q, top) => top.map(s => Row(q, s.id, s.score)) })(
+        Encoders.row(scored.schema))
+      .collect().toSeq.groupMap(_.get(0))(scoredId)
+    val out = qRows.map(_.get(0)).distinct.flatMap(q => partials.get(q).toSeq.flatMap(ps =>
+      TopK.best(k, ps).zipWithIndex.map { case (s, i) => Row(q, s.id, s.score, i + 1L) }))
+    scorable.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+      StructField(qIdCol, qIdType), StructField(idCol, LongType),
+      StructField("score", DoubleType), StructField("rk", LongType))))
   }
 
   /** Full-corpus BM25 posting index over the documents table — the
@@ -315,8 +361,8 @@ object KeywordSearch {
   }
 
   /** Per-token document frequency derived from the staged index,
-    * memoized per (session, dir) — tiny (one row per distinct
-    * token), broadcast at query time.
+    * memoized per (session, dir) — one row per distinct token, read
+    * at query time for the query vocabulary only.
     */
   private def bm25IndexDf(spark: SparkSession, dir: String): DataFrame =
     graft.DfCache.getOrCompute(spark, s"bm25_df:$dir")(
@@ -331,15 +377,14 @@ object KeywordSearch {
 
   /** Query-level demo: the standard query set BM25-ranked over the
     * documents corpus through the staged posting index, top-5 per
-    * query. Full-corpus df restricted to the query vocabulary equals
-    * the ad-hoc [[bm25]] form's vocab-pruned df, so both paths score
-    * identically (spec-asserted).
+    * query, as a local frame in (q_id, rk) order. Full-corpus df
+    * restricted to the query vocabulary equals the ad-hoc [[bm25]]
+    * form's vocab-pruned df, so both paths score identically
+    * (spec-asserted); they share [[bm25Score]]'s query side and top-k.
     */
   def keywordBm25(spark: SparkSession, dir: String,
                   k: Int = Bm25K, k1: Double = Bm25K1,
                   b: Double = Bm25B): DataFrame = {
-    val qtok = standardQueries(spark).select(col("q_id").as("_qid"),
-      explode(array_distinct(tokens(col("q_text")))).as("_tok"))
     // the query vocabulary's shard set: a pure function of the
     // CONSTANT standard query strings, derived driver-side with no
     // Spark job (the collect-based ann_ivfpq pattern is for sets that
@@ -347,29 +392,24 @@ object KeywordSearch {
     // filter reaches the staged index's parquet scan as a
     // PartitionFilter, so only the directories holding the query's
     // tokens are read at all
-    val shards = standardQueryShards
     val post = bm25Index(spark, dir)
-      .where(col("_shard").isin(shards: _*))
-    // restrict the df table to the query vocabulary BEFORE broadcast:
-    // the full-corpus df table is one row per distinct token — fine
-    // to scan, wrong to broadcast
-    val dfVoc = bm25IndexDf(spark, dir)
-      .join(broadcast(qtok.select(col("_tok")).distinct()), "_tok")
-    bm25Score(bm25Scorable(post, broadcast(dfVoc), bm25IndexStats(spark, dir)),
-      qtok, "q_id", "doc_id",
+      .where(col("_shard").isin(standardQueryShards: _*))
+    // bm25Score's `_tok IN (vocabulary)` filter reaches both sides of
+    // the df join (pushed to the postings, inferred through the
+    // equi-join for the df table), so the full df table is never joined
+    bm25Score(bm25Scorable(post, bm25IndexDf(spark, dir), bm25IndexStats(spark, dir)),
+      standardQueries(spark), "q_id", "q_text", "doc_id",
       k = k, k1p1 = k1 + 1.0, k1 = k1, b = b,
       oneMinusB = 1.0 - b)
-      .orderBy(col("q_id"), col("rk"))
   }
 
-  /** keywordBm25's top-5 frame cached per (session, dir) — the
-    * lexical side of the fusion, scored once like
-    * [[keywordTopCached]]/[[knnTextCached]].
+  /** keywordBm25's top-5 rows held per (session, dir) — the lexical
+    * side of the fusion, scored once like
+    * [[keywordTopCached]]/[[knnTextCached]]. The frame is local
+    * already, so there is nothing to persist.
     */
   private def bm25TopCached(spark: SparkSession, dir: String): DataFrame =
-    graft.DfCache.getOrCompute(spark, s"bm25_top:$dir")(
-      keywordBm25(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.DfCache.getOrCompute(spark, s"bm25_top:$dir")(keywordBm25(spark, dir))
 
   /** Reciprocal-rank fusion of the BM25 lexical top-5 with the dense
     * knn_text top-5 — the standard hybrid-retrieval merge (RRF,

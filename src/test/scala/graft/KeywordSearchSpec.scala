@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions.tokens
+import graft.functions.TopK
 import graft.operators.KeywordSearch
+import graft.sources.Tables
 
 /** BM25 posting-join retrieval (KeywordSearch.bm25): scoring wiring
   * against an independent driver-side computation, idf/rarity
@@ -200,6 +204,74 @@ class KeywordSearchSpec extends SparkSpec {
       val top = want.toSeq.collect { case ((qq, d), s) if qq == q => (s, d) }
         .sortBy { case (s, d) => (-s, d) }.take(rs.length).map(_._2)
       assert(rs.sortBy(_.getAs[Long]("rk")).map(_.getAs[Long]("doc_id")).toSeq == top, s"q=$q")
+    }
+  }
+
+  test("a warm bm25 call over a local one-query frame runs one Spark job") {
+    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    def call(): Unit = KeywordSearch.bm25(d, "doc_id", "text",
+      Seq((0L, KeywordSearch.Query)).toDF("q_id", "q_text"), "q_id", "q_text").collect()
+    call()   // builds the corpus memo
+    val jobs = SparkSpec.jobsDuring(spark)(call())
+    assert(jobs <= 1, s"a warm call ran $jobs jobs")
+  }
+
+  /** The replaced query side and top-k, kept as the reference: the
+    * query tokens broadcast-joined against the same corpus memo, the
+    * per-query top-k through the TopKAgg shuffle.
+    */
+  private def bm25Joined(d: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    val (k1, b) = (KeywordSearch.Bm25K1, KeywordSearch.Bm25B)
+    val qtok = q.select(col("q_id").as("_qid"),
+      explode(array_distinct(tokens(col("q_text")))).as("_tok"))
+    val avgdl = col("_sum_dl").cast("double") / col("_n_docs")
+    val idf = (col("_n_docs") - col("_df") + lit(0.5)) / (col("_df") + lit(0.5))
+    val tfNorm = (col("_tf") * lit(k1 + 1.0)) /
+      (col("_tf") + lit(k1) * (lit(1.0 - b) + (lit(b) * col("_dl")) / avgdl))
+    KeywordSearch.bm25Corpus(d, "doc_id", "text").join(broadcast(qtok), "_tok")
+      .select(col("_qid"), col("_did"), col("_tok"), (idf * tfNorm).as("_term"))
+      .groupBy(col("_qid"), col("_did"))
+      .agg(collect_list(struct(col("_tok"), col("_term"))).as("_ts"))
+      .select(col("_qid"), col("_did"),
+        graft.functions.Par.round4(aggregate(
+          transform(array_sort(col("_ts")), s => s.getField("_term")),
+          lit(0.0), (a, x) => a + x)).as("_score"))
+      .groupBy(col("_qid"))
+      .agg(TopK.topK(k)(col("_score"), col("_did")).as("_top"))
+      .select(col("_qid"), posexplode(col("_top")).as(Seq("_i", "_hit")))
+      .select(col("_qid").as("q_id"), col("_hit.id").as("doc_id"),
+        col("_hit.score").as("score"), (col("_i") + 1).cast("long").as("rk"))
+  }
+
+  test("bm25 equals the broadcast-join + TopKAgg spelling, bit for bit") {
+    val sf001 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val d = Tables.documents(spark, sf001).select(col("doc_id"), col("text"))
+    // shared tokens (a/b/g), a token repeated in one query (c), no
+    // match (d), null text (e), "" (f: tokenizes to [""]), and a q_id
+    // on two rows (g), whose rows' tokens pool — "table" twice
+    val texts = Seq("a" -> "join hash table", "b" -> "hash join", "c" -> "stream stream window agg",
+      "d" -> "zzz qqq", "e" -> null, "f" -> "", "g" -> "table", "g" -> "window agg table")
+    val byString = texts.toDF("q_id", "q_text")
+    val byLong = byString.select((ascii(col("q_id")) - 96).cast("long").as("q_id"), col("q_text"))
+    def rows(df: DataFrame) = df.collect().toSeq
+      .map(r => (String.valueOf(r.get(0)), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+      .sorted
+    // "" tokenizes to [""]: it matches only a text with an empty
+    // token, which sf0.01 has none of; a double space makes one
+    val blank = 10000000L
+    val dBlank = d.unionByName(Seq((blank, "hash  join")).toDF("doc_id", "text"))
+    // k = 600 exceeds every query's matches (the corpora hold ≤ 501 docs)
+    for (c <- Seq(d, dBlank); q <- Seq(byString, byLong); k <- Seq(5, 600)) {
+      val got = KeywordSearch.bm25(c, "doc_id", "text", q, "q_id", "q_text", k)
+      val want = bm25Joined(c, q, k)
+      assert(got.dtypes.toSeq === want.dtypes.toSeq)
+      val (g, w) = (rows(got), rows(want))
+      assert(g.nonEmpty && g === w, s"k=$k q_id ${q.schema.head.dataType}")
+      val qs = g.map(_._1).toSet
+      assert(!qs.exists(Set("d", "e", "4", "5")), s"unmatched queries scored: $qs")
+      val empty = g.filter(r => r._1 == "f" || r._1 == "6").map(_._2)
+      assert(empty === (if (c eq dBlank) Seq(blank) else Nil))
     }
   }
 }

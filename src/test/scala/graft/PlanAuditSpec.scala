@@ -79,16 +79,44 @@ class PlanAuditSpec extends SparkSpec {
       "query set should be broadcast against the corpus scan")
   }
 
-  test("keyword_bm25: posting join pruned by broadcast vocab; top-k partial; no cartesian") {
-    val plan = finalPlan(KeywordSearch.keywordBm25(spark, sfDir))
+  /** Physical plans of the SQL executions `f` ran, oldest first. The
+    * listener bus is async, so wait until the count is stable.
+    */
+  private def plansDuring(f: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      var last = -1
+      var spins = 0
+      while (plans.size != last && spins < 30) {
+        last = plans.size; Thread.sleep(100); spins += 1
+      }
+      plans.toArray(Array.empty[String]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("keyword_bm25 job: shard-pruned scan, no top-k shuffle") {
+    // keywordBm25 returns a local frame: audit the job it ran, its last
+    val plan = plansDuring(KeywordSearch.keywordBm25(spark, sfDir)).last
     assert(!plan.contains("CartesianProduct"),
       s"bm25 must never cross-join the corpus:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"vocab/df/query joins should broadcast the small side:\n$plan")
-    assert(plan.toLowerCase.contains("partial_topk"),
-      s"no partial aggregation for bm25 top-k:\n$plan")
+    // the top-k is partition-local, merged on the driver: no TopKAgg
+    // shuffle and no window
+    assert(!plan.toLowerCase.contains("topk"),
+      s"bm25 top-k still runs as an aggregate:\n$plan")
     assert(!plan.contains("Window"),
       s"bm25 top-k still uses a window exchange:\n$plan")
+    // the query vocabulary reaches the posting scan as a pushed filter
+    val pushed = plan.linesIterator.filter(_.contains("PushedFilters:")).mkString("\n")
+    assert(pushed.contains("In(_tok"),
+      s"vocabulary is not pushed to the posting scan:\n$plan")
     // the query vocabulary's static shard set must reach the staged
     // posting index's parquet scan as a PARTITION filter (same
     // discipline as the ivfpq check below: a filter above the scan or

@@ -1,7 +1,4 @@
 package graft
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Throughput surface: every SparkEntry query timed over `Passes`
   * full passes. Pass 1 is COLD (includes building the session-shared
@@ -46,6 +43,13 @@ import org.apache.spark.sql.SparkSession
   * monotone [6, 6, 6]→[12, 12, 12] rung step indicts the plan
   * (r13 verdict #2: the 256× spikes needed prose adjudication
   * because only pass TOTALS were published).
+  *
+  * PROFILE: one [[Obs]] listener also publishes, per query, the layer
+  * split of every pass (`layers`: build / plan / exec ms), the
+  * executed-plan hash of every pass (`plan_hash`; a flip is an AQE
+  * re-plan) and the top 5 stages of the task_metrics pass (`stages`).
+  * `SPARK_GRAFT_BENCH_ONLY` + `SPARK_GRAFT_BENCH_PASSES` profile one
+  * query. These three ride the artifact file only, not stdout.
   */
 object Bench {
   /** Warm-pass count; `SPARK_GRAFT_BENCH_PASSES` overrides (the rung
@@ -67,51 +71,23 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
-  /** Per-task executor metrics, summed across every task that ended
-    * since startup — Bench diffs snapshots around each timed query.
-    * Listener delivery is asynchronous; [[drain]] empties the bus
-    * before each snapshot so deltas attribute to the right query.
+  /** One query's pass: task sums (as [[Obs.Span]]`.tasks`), [build,
+    * plan, exec] ms, the timed action's executed-plan hash and its top
+    * 5 stages by run time.
     */
-  private final class TaskMetricsAgg extends SparkListener {
-    private val acc = Array.fill(6)(new java.util.concurrent.atomic.AtomicLong())
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        acc(0).addAndGet(m.executorRunTime)
-        acc(1).addAndGet(m.jvmGCTime)
-        acc(2).addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        acc(3).addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        acc(4).addAndGet(m.memoryBytesSpilled)
-        acc(5).addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: Array[Long] = acc.map(_.get)
-  }
-
-  /** Flush the async listener bus so TaskMetricsAgg has seen every
-    * task of the just-finished query. `listenerBus` is private[spark]
-    * (bench-only instrumentation, so reflection over a forked Spark
-    * accessor); any failure degrades to a short sleep — metrics are
-    * receipts, never a correctness dependency.
-    */
-  private def drain(sc: SparkContext): Unit =
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(50) }
+  private final case class Receipt(tasks: Array[Long], layers: Seq[Double],
+                                   planHash: String, stages: Seq[Obs.Stage])
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the SHARED session surface (graft.Sessions): the same configs
     // Verify gates and a library consumer gets — rationale documented
     // there (r18: one builder instead of a Bench-only config block)
-    val spark = Sessions.builder(cpus)
+    val spark = Sessions.builderFromEnv()
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new TaskMetricsAgg
-    spark.sparkContext.addSparkListener(metrics)
+    val obs = Obs.attach(spark)
     // absorb JVM/codegen warm-up on the BENCH dataset so per-query
     // timings are comparable (entry()'s hardcoded sf0.001 path may not
     // exist on this machine)
@@ -139,36 +115,48 @@ object Bench {
     // median below.
     val rebuilt = scala.collection.mutable.ArrayBuffer[Set[String]]()
     val memoed = scala.collection.mutable.ArrayBuffer[Set[String]]()
-    val passMetrics = scala.collection.mutable.ArrayBuffer[Map[String, Array[Long]]]()
+    val receipts = scala.collection.mutable.ArrayBuffer[Map[String, Receipt]]()
     def runPass(): Map[String, Double] = {
       val rb = scala.collection.mutable.HashSet[String]()
       val mm = scala.collection.mutable.HashSet[String]()
-      val pm = scala.collection.mutable.HashMap[String, Array[Long]]()
+      val rc = scala.collection.mutable.HashMap[String, Receipt]()
       val times = names.map { name =>
-        drain(spark.sparkContext)
+        obs.take()
         val r0 = DfCache.stagingRebuilds
         val m0 = DfCache.memoComputes
-        val s0 = metrics.snapshot
         val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() }
+        var t1 = t0
+        var failed = false
+        try {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          t1 = System.nanoTime()
+          df.count()
+        }
         catch {
           // a failing query must be VISIBLE, not timed as a fast success
           case e: Throwable =>
+            failed = true
             // JSON-safe: strip EVERY control char plus quote/backslash —
             // Spark messages carry \r\t and box-drawing plan fragments
             errors.getOrElseUpdate(name, e.getClass.getSimpleName + ": " +
               String.valueOf(e.getMessage).replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(120))
         }
-        val t = (System.nanoTime() - t0) / 1e9
-        drain(spark.sparkContext)
+        val t2 = System.nanoTime()
+        val span = obs.take()
         if (DfCache.stagingRebuilds != r0) rb += name
         if (DfCache.memoComputes != m0) mm += name
-        pm(name) = metrics.snapshot.zip(s0).map { case (a, b) => a - b }
-        name -> t
+        // the timed count is the span's last SQL action
+        val plan = if (failed) None else span.plans.lastOption
+        val buildMs = (t1 - t0) / 1e6
+        val planMs = plan.fold(0.0)(_.planMs.toDouble)
+        rc(name) = Receipt(span.tasks,
+          Seq(buildMs, planMs, math.max(0.0, (t2 - t0) / 1e6 - buildMs - planMs)),
+          plan.fold("")(_.hash), span.stages.sortBy(-_.runMs).take(5))
+        name -> (t2 - t0) / 1e9
       }.toMap
       rebuilt += rb.toSet
       memoed += mm.toSet
-      passMetrics += pm.toMap
+      receipts += rc.toMap
       times
     }
     var passList = (1 to Passes).map(_ => runPass())
@@ -197,11 +185,10 @@ object Bench {
     // ms precision is plenty and halves the line the driver may
     // tail-truncate (r7 lost 23 medians + the totals to truncation)
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = med.map { case (k, v) =>
-        val t = if (errors.contains(k)) "-1.0" else f3(v)   // failed => sentinel
-        s"\"" + k + "\":" + t
-      }
-      .mkString("{", ",", "}")
+    def perQuery(v: String => String): String =
+      names.map(n => s"\"" + n + "\":" + v(n)).mkString("{", ",", "}")
+    val medOf = med.toMap
+    val qs = perQuery(n => if (errors.contains(n)) "-1.0" else f3(medOf(n)))   // failed => sentinel
     val errJson = errors.map { case (k, m) => s"\"$k\":\"$m\"" }.mkString("{", ",", "}")
     val passTotals = passes.map(_.values.sum)
     val total = med.map(_._2).sum
@@ -220,11 +207,7 @@ object Bench {
     // lands, and a cold regression is invisible in the medians. Same
     // failure sentinel as the medians — a fast exception must not read
     // as a cold-time improvement.
-    val coldQs = names.map { n =>
-        val t = if (errors.contains(n)) "-1.0" else f3(passes.head(n))
-        s"\"" + n + "\":" + t
-      }
-      .mkString("{", ",", "}")
+    val coldQs = perQuery(n => if (errors.contains(n)) "-1.0" else f3(passes.head(n)))
     // per-query task-metric receipts from the last clean WARM pass
     // (pass 1 only when every warm pass was contaminated — the 1-based
     // pass index rides as the array's LAST element so a cold-pass
@@ -233,24 +216,38 @@ object Bench {
     // makes a rung delta adjudicable from the artifact (spill vs box
     // state) without a rerun
     def mb(b: Long): String = "%.1f".formatLocal(java.util.Locale.ROOT, b / 1048576.0)
-    val tmJson = names.map { n =>
-        val cp = cleanPasses(n)
-        val i = cp.filter(_ > 0).lastOption.getOrElse(cp.last)
-        val m = passMetrics(i).getOrElse(n, Array.fill(6)(0L))
-        s"\"" + n + "\":[" + m(0) + "," + m(1) + "," +
-          m.drop(2).map(mb).mkString(",") + "," + (i + 1) + "]"
-      }
-      .mkString("{", ",", "}")
+    def receiptPass(n: String): Int = {
+      val cp = cleanPasses(n)
+      cp.filter(_ > 0).lastOption.getOrElse(cp.last)
+    }
+    val tmJson = perQuery { n =>
+      val i = receiptPass(n)
+      val m = receipts(i)(n).tasks
+      "[" + m(0) + "," + m(1) + "," + m.drop(2).map(mb).mkString(",") + "," + (i + 1) + "]"
+    }
     // per-pass per-query raw wall times (same order as pass_totals);
     // a query's excluded passes are still SHOWN here — staging_rebuilds
     // / memo_computes say which indices the median skipped
-    val passQs = names.map { n =>
-        val v =
-          if (errors.contains(n)) passes.indices.map(_ => "-1.0")
-          else passes.indices.map(i => f3(passes(i)(n)))
-        s"\"" + n + "\":" + v.mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
+    val passQs = perQuery(n => passes.indices
+      .map(i => if (errors.contains(n)) "-1.0" else f3(passes(i)(n)))
+      .mkString("[", ",", "]"))
+    // per query and pass: the layer split [build, plan, exec] ms
+    // (build = the query function returning its frame, plan = the
+    // timed action's analysis + optimization + planning, exec = the
+    // rest) and the executed plan's hash (a flip across passes is an
+    // AQE re-plan); then the top 5 stages by summed task run time in
+    // the task_metrics pass: [stage_id, tasks, run_ms, cpu_ms,
+    // deser_ms, gc_ms, shuffle_read_mb, shuffle_write_mb, rdd_chain]
+    def f1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)
+    val layersJson = perQuery(n =>
+      receipts.map(_(n).layers.map(f1).mkString("[", ",", "]")).mkString("[", ",", "]"))
+    val planJson = perQuery(n =>
+      receipts.map(r => "\"" + r(n).planHash + "\"").mkString("[", ",", "]"))
+    val stagesJson = perQuery(n => receipts(receiptPass(n))(n).stages.map { st =>
+        s"[${st.id},${st.tasks},${st.runMs},${st.cpuMs},${st.deserMs},${st.gcMs}," +
+          s"${mb(st.shuffleReadBytes)},${mb(st.shuffleWriteBytes)}," +
+          "\"" + st.rdds.replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(200) + "\"]"
+      }.mkString("[", ",", "]"))
     // summary fields FIRST: a consumer that cap-sizes the line loses
     // per-query detail, never the round's totals (r7 verdict #5)...
     // which (query, pass) timings included a staged-artifact rebuild /
@@ -284,15 +281,20 @@ object Bench {
     // copy at both ends, either truncation direction preserves the
     // totals; `summary_tail` groups the copy under one key so the
     // object stays valid JSON with distinct keys.
-    val line = s"""{$summary,"queries":$qs,"cold_queries":$coldQs,""" +
+    // The profile (layers, plan_hash, stages) rides the file only: the
+    // stdout line keeps its keys and size.
+    def line(profile: String) =
+      s"""{$summary,"queries":$qs,"cold_queries":$coldQs,""" +
       s""""query_passes":$passQs,""" +
-      s""""task_metrics":$tmJson,"cap_audit":$audit,"summary_tail":{$summary}}"""
+      s""""task_metrics":$tmJson,$profile"cap_audit":$audit,"summary_tail":{$summary}}"""
     try {
       Option(new java.io.File(artifactPath).getParentFile).foreach(_.mkdirs())
       val w = new java.io.PrintWriter(artifactPath, "UTF-8")
-      try w.println(line) finally w.close()
+      try w.println(line(
+        s""""layers":$layersJson,"plan_hash":$planJson,"stages":$stagesJson,"""))
+      finally w.close()
     } catch { case scala.util.control.NonFatal(_) => () }   // stdout still carries it
-    println(line)
+    println(line(""))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Replicate a testdata scale factor N× with CONSISTENT key shifts —
@@ -23,14 +23,7 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val mult = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builderFromEnv().config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def w(df: DataFrame, name: String): Unit =

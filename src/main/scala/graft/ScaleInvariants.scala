@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** ENGINE-ONLY rung checker: replication-arithmetic invariants that
@@ -38,14 +38,7 @@ object ScaleInvariants {
     val mult = args(2).toInt
     require(mult > 0 && (mult & (mult - 1)) == 0,
       s"mult must be a power of two for the bit-exact double claims, got $mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builderFromEnv().config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val results = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE session configuration surface — one builder shared by Bench,
-  * Verify, the dev probes and any library consumer, so the measured
-  * configuration and the verified configuration are the same object
-  * (r17 verdict: the tuned configs lived only in the Bench session).
+  * Verify, the dev tools, the tests and any library consumer, so the
+  * measured configuration and the verified configuration are the same
+  * object (r17 verdict: the tuned configs lived only in the Bench
+  * session).
   *
   * Config rationale (receipts in OPTIMIZATION_r17.md /
   * OPTIMIZATION_r18.md; every setting scale-justified, none is a
@@ -78,7 +79,9 @@ object Sessions {
       // board total was a wash. Cache layout needs the per-frame
       // decision the operators already make, not a session global.
 
-  /** [[builder]] with the env-var core count the harness tools use. */
+  /** [[builder]] with the env-var core count (`SPARK_GRAFT_CPUS`,
+    * default 4) every harness tool uses.
+    */
   def builderFromEnv(): SparkSession.Builder =
     builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 }

@@ -920,45 +920,6 @@ object Dedup {
       })
   }
 
-  /** Dev-only sub-chain timing for IncProbe: re-times each stage of
-    * the warm incremental path against the SAME session memos the
-    * real query uses (keys match [[neardupIncremental]]'s `mat`).
-    * Returns the verified best-match count.
-    */
-  private[operators] def incProbePieces(spark: SparkSession, dir: String): Long = {
-    def t(name: String)(f: => Long): Long = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[incpiece] $name%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f s rows=$n")
-      n
-    }
-    def memo(slot: String) = DfCache.getOrCompute(spark, s"neardup_$slot:$dir")(
-      sys.error(s"memo $slot should be warm"))
-    val basePosting = memo("base_rep_posting")
-    val baseBanded = memo("base_rep_banded")
-    val deltaMembers = memo("delta_members")
-    val deltaPosting = memo("delta_rep_posting")
-    t("basePosting.count")(basePosting.count())
-    t("baseBanded.count")(baseBanded.count())
-    t("deltaPosting.count")(deltaPosting.count())
-    val banded = bandedSigsOf(deltaPosting)
-    t("bandedSigs(delta)")(banded.count())
-    val cand = banded
-      .select(col("bd"), col("band_key"), col("doc_id").as("b_id"))
-      .join(baseBanded.select(col("bd"), col("band_key"), col("doc_id").as("a_id")),
-        Seq("bd", "band_key"))
-      .select(col("a_id"), col("b_id"))
-      .distinct()
-    t("cand (band join)")(cand.count())
-    val jac = jaccardOf(cand, basePosting.unionByName(deltaPosting))
-    t("jaccardOf")(jac.count())
-    val w = Window.partitionBy(col("b_id")).orderBy(col("jaccard").desc, col("a_id"))
-    val best = jac.where(col("jaccard") >= 0.8)
-      .withColumn("rk", row_number().over(w)).where(col("rk") === 1)
-    t("best-per-rep")(best.count())
-    t("member expand")(deltaMembers.join(
-      best.select(col("b_id").as("rep_id")), Seq("rep_id")).count())
-  }
-
   /** The incremental probe over arbitrary base/delta corpora — the
     * body of [[neardupIncremental]], QUOTIENTED by exact content on
     * BOTH sides like [[minhashPairsOf]]: signatures, bands and the

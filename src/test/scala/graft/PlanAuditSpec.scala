@@ -80,7 +80,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   /** Physical plans of the SQL executions `f` ran, oldest first. The
-    * listener bus is async, so wait until the count is stable.
+    * listener bus is async, so drain it before reading them.
     */
   private def plansDuring(f: => Unit): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -93,11 +93,7 @@ class PlanAuditSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       f
-      var last = -1
-      var spins = 0
-      while (plans.size != last && spins < 30) {
-        last = plans.size; Thread.sleep(100); spins += 1
-      }
+      Obs.drain(spark.sparkContext)
       plans.toArray(Array.empty[String]).toSeq
     } finally spark.listenerManager.unregister(listener)
   }

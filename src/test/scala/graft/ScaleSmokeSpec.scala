@@ -446,12 +446,7 @@ class ScaleSmokeSpec extends SparkSpec {
       assert(rows.length == n)
       assert(rows.forall(_.getAs[Long]("n_overlap") == n - 1L),
         rows.take(3).mkString(", "))
-      // listener bus is async: wait until the record count is stable
-      var last = -1L
-      var spins = 0
-      while (shuffleRecords.get() != last && spins < 30) {
-        last = shuffleRecords.get(); Thread.sleep(100); spins += 1
-      }
+      Obs.drain(spark.sparkContext)
       // 4 passes × (union shuffle + window sort + bucket totals) over
       // ~2n rows each stays well under 50n; the pair join would need
       // ≥ n²/2 ≈ 5·10⁷ records just to exist
@@ -487,12 +482,7 @@ class ScaleSmokeSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val (labels, rounds) = graft.operators.Dedup.componentsWithRounds(pairs)
-      // listener bus is async: wait until the job count is stable
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 30) {
-        last = jobs.get(); Thread.sleep(100); spins += 1
-      }
+      Obs.drain(spark.sparkContext)
       // edges checkpoint + initial labels checkpoint + 1 job per round:
       // the convergence flag rides the checkpoint job's accumulator,
       // not a separate probe action
@@ -623,12 +613,7 @@ class ScaleSmokeSpec extends SparkSpec {
       val got = scores()
       // plan change must not change a single score
       assert(got === expected)
-      // listener bus is async: wait until counts are stable
-      var last = -1L
-      var spins = 0
-      while (totalRecords.get() != last && spins < 30) {
-        last = totalRecords.get(); Thread.sleep(100); spins += 1
-      }
+      Obs.drain(spark.sparkContext)
       // the witness: no task read the whole hot key. Unsalted, each
       // scoring join serializes >= 200k records through ONE task (the
       // observed AQE failure mode); salted 16-way, the hot key's

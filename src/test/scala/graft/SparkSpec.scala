@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs; mirrors Verify's config. */
+/** Shared local SparkSession for specs: the benched config
+  * ([[Sessions.builder]]) at 4 cores.
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
@@ -15,19 +17,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.builder("4").config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
   /** Spark jobs started while `f` runs; the listener bus is async, so
-    * wait until the count is stable before reading it.
+    * drain it before reading the count.
     */
   def jobsDuring(spark: SparkSession)(f: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -38,11 +34,7 @@ object SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       f
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 30) {
-        last = jobs.get(); Thread.sleep(100); spins += 1
-      }
+      Obs.drain(spark.sparkContext)
       jobs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
